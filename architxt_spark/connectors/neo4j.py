@@ -183,10 +183,7 @@ def write_cypher_live(
     endpoint oids — the connector-native equivalent of the reference's
     per-row MERGE statements.  Returns the per-frame option maps (the
     write manifest), which the shape-contract tests assert on."""
-    from architxt_spark.sinks.cypher import (
-        cypher_node_frames,
-        cypher_relationship_frames,
-    )
+    from architxt_spark.sinks.cypher import cypher_frames
 
     if writer is None:
         spark = nodes.sparkSession
@@ -203,7 +200,8 @@ def write_cypher_live(
             w.save()
 
     manifest: dict[str, dict[str, str]] = {}
-    for gname, frame in cypher_node_frames(nodes, schema).items():
+    node_frames, rel_frames = cypher_frames(nodes, schema)
+    for gname, frame in node_frames.items():
         options = {
             "labels": f":{gname}",
             "node.keys": OID_COL,
@@ -212,7 +210,7 @@ def write_cypher_live(
         writer(frame, options, "append")
         manifest[f"node:{gname}"] = options
 
-    for rname, frame in cypher_relationship_frames(nodes, schema).items():
+    for rname, frame in rel_frames.items():
         if "left_oid" in frame.columns:
             left_lbl, right_lbl = _relation_endpoints(schema, rname)
             rel_name = rname.replace("<->", "_")

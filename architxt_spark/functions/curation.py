@@ -138,6 +138,13 @@ def curate_corpus(
             "quality_model_weights and quality_model_pos/neg are mutually "
             "exclusive (pass seed frames to train, or a trained model)"
         )
+    # the fused classifier gate appends this column to the quality
+    # checkpoint; an input column of the same name would make it ambiguous
+    if "__cls_keep" in docs.columns:
+        raise ValueError(
+            "curate_corpus: input column '__cls_keep' clashes with the "
+            "internal classifier-gate column; rename it first"
+        )
     # materialize the gate's survivors ONCE: the census, the fingerprint
     # pass, and the minhash index all read this frame, and re-evaluating
     # the (shingle-heavy) quality predicate per consumer benched 33 s vs

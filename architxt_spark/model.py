@@ -111,14 +111,3 @@ def deterministic_oid(*parts: Column | str) -> Column:
     """
     cols = [F.col(p) if isinstance(p, str) else p for p in parts]
     return F.sha2(F.concat_ws("\x1f", *[c.cast("string") for c in cols]), 256)
-
-
-def is_leaf() -> Column:
-    """Predicate column: this row is a leaf token."""
-    return F.col("node_name").isNull() & F.col("leaf_value").isNotNull()
-
-
-def empty_nodes(spark):
-    """An empty node table with the canonical schema."""
-    return spark.createDataFrame([], NODE_SCHEMA)
-

@@ -70,10 +70,6 @@ def apply_tree_op(nodes: DataFrame, op: Callable[[PyTree], bool], op_name: str =
     return tree_buckets(nodes).applyInPandas(run, _OP_SCHEMA)
 
 
-def _changed_count(nodes_with_flag: DataFrame) -> int:
-    return nodes_with_flag.filter(F.col("changed") == "1").select("tree_id").distinct().count()
-
-
 def probe_ops(
     nodes: DataFrame,
     ops: list[tuple[str, Callable[[PyTree], bool]]],

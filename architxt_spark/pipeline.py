@@ -157,10 +157,10 @@ def export_cypher(
     """Forest → (per-label node frames, per-type relationship frames) in
     graph-connector shape (``export/cypher.py:17-176``); collapsible middle
     groups become attributed edges."""
-    from architxt_spark.sinks import cypher_node_frames, cypher_relationship_frames
+    from architxt_spark.sinks import cypher_frames
 
     schema = schema or schema_from_forest(nodes, keep_unlabelled=False)
-    return cypher_node_frames(nodes, schema), cypher_relationship_frames(nodes, schema)
+    return cypher_frames(nodes, schema)
 
 
 def _component_id(obj) -> str:

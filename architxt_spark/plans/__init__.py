@@ -8,5 +8,6 @@ from architxt_spark.plans.schema import (  # noqa: F401
     extract_datasets,
     extract_group_dataset,
     extract_valid_trees,
+    group_instances,
     schema_from_forest,
 )

@@ -10,12 +10,21 @@ at 144-218, orientation inference 156-212 + ``_convert_relations`` 235-266,
 Design: the schema itself is tiny (distinct labels), so :class:`SchemaPlan`
 is a driver-side object; but it is DERIVED from the node table with two
 aggregations (productions, orientation evidence) that scale with the forest.
-Dataset extraction stays fully distributed (filter + join + pivot).
+
+Group instances live in ONE long frame, :func:`group_instances` — a row per
+(group, group node, OID, entity, value), the last duplicate entity winning.
+It is the only place the forest's ENT ⋈ leaf join and text aggregation are
+written.  :func:`extract_datasets` lands it once for every group and pivots
+the landed frame per group; the SQL and Cypher exporters
+(:mod:`architxt_spark.sinks`) pivot the same frame keyed by OID.  Every
+pivot takes the schema's entity set as explicit values, so none pays a
+distinct-values job and every frame has exactly the schema's columns.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 from enum import Enum
 from itertools import combinations
@@ -360,26 +369,27 @@ def schema_from_forest(
     )
 
 
-def extract_group_dataset(
-    nodes: DataFrame, group_name: str, *, entities: list[str] | None = None
-) -> DataFrame:
-    """All instances of one group → DataFrame(entity columns)
-    (``Tree.group_instances``, ``architxt/tree.py:622-667``).
+def group_instances(nodes: DataFrame, groups: Iterable[str]) -> DataFrame:
+    """Every instance of the named groups as long rows
+    ``(group_name, gid, oid, entity, value)``
+    (``Tree.group_instances``, ``architxt/tree.py:622-667``, before its
+    pivot).
 
-    filter(GROUP) ⋈ ENT children ⋈ leaf text → groupBy(group node).pivot(
-    entity).agg(first) → dropDuplicates.  Distributed end to end; the pivot
-    column list is the (small) distinct entity-name set.
+    ``gid`` is the group node, ``oid`` its deterministic object id (the
+    loader's ``metadata.oid``, else the node id), ``value`` the entity's
+    leaf tokens joined in position order.  When one group node holds the
+    same entity name twice the LAST one wins (dict-comprehension semantics
+    in the reference, ``tree.py:655-659``).
 
-    Pass ``entities`` when the column set is already known (loader table
-    schemas, ``SchemaPlan.groups``): Spark then skips the pivot's
-    distinct-values job, so the whole extraction is ONE job with no
-    materialization barrier — the difference between 1 and 3 passes over
-    the forest at scale.
-    """
-    groups = nodes.filter(
-        (F.col("node_type") == NodeType.GROUP) & (F.col("node_name") == group_name)
-    ).select(F.col("node_id").alias("gid"))
-
+    Callers that need several groups land it once and pivot the landed
+    frame per group (:func:`pivot_instances`)."""
+    grp = nodes.filter(
+        (F.col("node_type") == NodeType.GROUP) & F.col("node_name").isin(sorted(groups))
+    ).select(
+        F.col("node_name").alias("group_name"),
+        F.col("node_id").alias("gid"),
+        F.coalesce(F.col("metadata").getItem("oid"), F.col("node_id")).alias("oid"),
+    )
     ents = nodes.filter(F.col("node_type") == NodeType.ENT).select(
         F.col("node_id").alias("ent_id"),
         F.col("parent_id").alias("gid_ref"),
@@ -402,10 +412,8 @@ def extract_group_dataset(
             ).alias("value")
         )
     )
-    # duplicate entity names in one group: the LAST one wins (dict-comprehension
-    # semantics in the reference, ``tree.py:655-659``).
-    pivoted = (
-        groups.join(ent_text, groups.gid == ent_text.gid_ref, "inner")
+    return (
+        grp.join(ent_text, grp.gid == ent_text.gid_ref, "inner")
         .withColumn(
             "rn",
             F.row_number().over(
@@ -413,22 +421,65 @@ def extract_group_dataset(
             ),
         )
         .filter(F.col("rn") == 1)
-        .groupBy("gid")
+        .select("group_name", "gid", "oid", "entity", "value")
+    )
+
+
+def pivot_instances(
+    instances: DataFrame,
+    group_name: str,
+    entities: list[str] | None,
+    *,
+    key: str = "gid",
+) -> DataFrame:
+    """One group's rows of a :func:`group_instances` frame as one row per
+    ``key`` (default: per group node) with a column per entity.
+
+    Pass ``entities`` whenever the column set is known (``SchemaPlan.groups``,
+    loader table schemas): the columns are then exactly that list, in that
+    order, and Spark skips the pivot's distinct-values job.  Without it the
+    columns are the forest's distinct entity names for the group, sorted."""
+    return (
+        instances.filter(F.col("group_name") == group_name)
+        .groupBy(key)
         .pivot("entity", entities)
         .agg(F.first("value"))
+    )
+
+
+def extract_group_dataset(
+    nodes: DataFrame, group_name: str, *, entities: list[str] | None = None
+) -> DataFrame:
+    """All distinct instances of one group → DataFrame(entity columns)
+    (``Tree.group_instances``, ``architxt/tree.py:622-667``).
+
+    :func:`group_instances` for this one group, pivoted per group node,
+    then ``dropDuplicates``.  With ``entities`` given the whole extraction
+    is one lazy query with no materialization barrier and no
+    distinct-values job — the difference between 1 and 3 passes over the
+    forest at scale."""
+    return (
+        pivot_instances(group_instances(nodes, [group_name]), group_name, entities)
         .drop("gid")
         .dropDuplicates()
     )
-    return pivoted
 
 
 def extract_datasets(nodes: DataFrame, schema: SchemaPlan) -> dict[str, DataFrame]:
     """Per-group dataset extraction (``Schema.extract_datasets``,
-    ``architxt/schema.py:419-440``).  The schema already carries each
-    group's entity set, so every pivot gets explicit values — one job per
-    group, no distinct-values pre-pass."""
+    ``architxt/schema.py:419-440``).
+
+    Lands one :func:`group_instances` frame for all of the schema's groups
+    (one eager barrier at call time); each returned dataset is a filter
+    plus a pivot over that landed frame with the schema's entity set as
+    explicit columns, so no dataset reads the forest again."""
+    if not schema.groups:
+        return {}
+    instances = stage_barrier(group_instances(nodes, schema.groups))
     return {
-        name: extract_group_dataset(nodes, name, entities=sorted(schema.groups[name]))
+        name: pivot_instances(instances, name, sorted(schema.groups[name]))
+        .drop("gid")
+        .dropDuplicates()
         for name in schema.groups
     }
 

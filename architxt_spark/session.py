@@ -170,30 +170,6 @@ def read_parquet_if_exists(spark: SparkSession, path: str):
         raise
 
 
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, tables=TPCH_TABLES) -> dict:
-    """Read the driver-generated parquet tables and register temp views."""
-    out = {}
-    for t in tables:
-        df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
-        df.createOrReplaceTempView(t)
-        out[t] = df
-    return out
-
-
 #: Engine optimizer profile: ``InferFiltersFromGenerate`` copies the ENTIRE
 #: generator-input expression into an inferred ``size(...) > 0 AND
 #: isnotnull(...)`` filter.  For the wide struct-array node emitters the

@@ -2,23 +2,35 @@
 (``architxt/database/export/sql.py:47-371`` re-expressed Spark-first).
 
 The reference walks trees row-by-row with select-before-insert dedup
-(``export/sql.py:303-371``); here each group becomes ONE DataFrame keyed
-by its deterministic OID (``dropDuplicates`` on the PK), FK columns are
-wired with joins on the REL pairs, and n-n relations become a join-table
-frame.  At scale every frame goes out through ``df.write.jdbc`` (or Delta);
+(``export/sql.py:303-371``).  Here :func:`export_sql_frames` reads the
+forest at most twice, whatever the number of tables: it lands ONE
+:func:`~architxt_spark.plans.schema.group_instances` frame (a long row per
+group instance entity value) and ONE :func:`relation_pairs` frame (a row
+per REL instance of every relation).  Each group table is then a filter
+plus a pivot of the landed instances keyed by the group's deterministic
+OID, with the schema's entity set as explicit pivot values — so its
+columns are exactly :func:`schema_ddl`'s.  FK columns are joined in from
+the landed pairs, and n-n relations become join-table frames over them.
+At scale every frame goes out through ``df.write.jdbc`` (or Delta);
 :func:`write_sqlite` is the driver-side test harness for environments
 without a JDBC driver jar.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping
+from collections.abc import Iterable, Mapping
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from architxt_spark.model import NodeType
-from architxt_spark.plans.schema import RelationOrientation, SchemaPlan
+from architxt_spark.plans.schema import (
+    RelationOrientation,
+    SchemaPlan,
+    group_instances,
+    pivot_instances,
+)
+from architxt_spark.session import stage_barrier
 
 OID_COL = "_architxt_oid"
 
@@ -73,60 +85,42 @@ def schema_ddl(schema: SchemaPlan, *, dialect: str = "ansi") -> list[str]:
     return stmts
 
 
+def _table_frame(instances: DataFrame, group_name: str, entities: list[str] | None) -> DataFrame:
+    return pivot_instances(instances, group_name, entities, key="oid").withColumnRenamed(
+        "oid", OID_COL
+    )
+
+
 def group_frame(nodes: DataFrame, group_name: str) -> DataFrame:
     """One row per distinct group OID with entity columns (the keyed twin of
-    ``extract_group_dataset`` — dedup by OID, ``export/sql.py:303-340``)."""
-    groups = nodes.filter(
-        (F.col("node_type") == NodeType.GROUP) & (F.col("node_name") == group_name)
-    ).select(
-        F.col("node_id").alias("gid"),
-        F.coalesce(F.col("metadata").getItem("oid"), F.col("node_id")).alias(OID_COL),
-    )
-    ents = nodes.filter(F.col("node_type") == NodeType.ENT).select(
-        F.col("node_id").alias("ent_id"),
-        F.col("parent_id").alias("gid_ref"),
-        F.col("pos").alias("ent_pos"),
-        F.col("node_name").alias("entity"),
-    )
-    leaves = nodes.filter(F.col("node_name").isNull() & F.col("leaf_value").isNotNull()).select(
-        F.col("parent_id").alias("leaf_parent"), "pos", "leaf_value"
-    )
-    ent_text = (
-        ents.join(leaves, ents.ent_id == leaves.leaf_parent, "left")
-        .groupBy("ent_id", "gid_ref", "ent_pos", "entity")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "leaf_value"))),
-                    lambda s: s["leaf_value"],
-                ),
-                " ",
-            ).alias("value")
-        )
-    )
-    pivoted = (
-        groups.join(ent_text, groups.gid == ent_text.gid_ref, "inner")
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("gid", "entity").orderBy(F.col("ent_pos").desc())
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .groupBy(OID_COL)
-        .pivot("entity")
-        .agg(F.first("value"))
-        .dropDuplicates([OID_COL])
-    )
-    return pivoted
+    ``extract_group_dataset`` — dedup by OID, ``export/sql.py:303-340``):
+    a pivot of :func:`~architxt_spark.plans.schema.group_instances` over the
+    forest's entity names.  :func:`group_frames` is the schema-driven form."""
+    return _table_frame(group_instances(nodes, [group_name]), group_name, None)
 
 
-def relation_pairs(nodes: DataFrame, rel_name: str) -> DataFrame:
-    """(left_group, left_oid, right_group, right_oid) per REL instance —
-    the two GROUP children of each REL node, sides by child position."""
+def group_frames(
+    nodes: DataFrame, schema: SchemaPlan, groups: Iterable[str] | None = None
+) -> dict[str, DataFrame]:
+    """:func:`group_frame` for several of the schema's groups (all when
+    ``groups`` is None) over ONE landed ``group_instances`` frame: one
+    forest pass at call time, then a filter plus a pivot per group whose
+    columns are exactly the schema's (``schema_ddl``'s) entity columns."""
+    names = sorted(schema.groups if groups is None else groups)
+    if not names:
+        return {}
+    instances = stage_barrier(group_instances(nodes, names))
+    return {g: _table_frame(instances, g, sorted(schema.groups[g])) for g in names}
+
+
+def relation_pairs(nodes: DataFrame, rel_names: Iterable[str]) -> DataFrame:
+    """(rel_name, left_group, left_oid, right_group, right_oid) per REL
+    instance of the named relations — the two GROUP children of each REL
+    node, sides by child position.  One forest join covers every relation;
+    callers filter by ``rel_name``."""
     rels = nodes.filter(
-        (F.col("node_type") == NodeType.REL) & (F.col("node_name") == rel_name)
-    ).select(F.col("node_id").alias("rel_id"))
+        (F.col("node_type") == NodeType.REL) & F.col("node_name").isin(sorted(rel_names))
+    ).select(F.col("node_id").alias("rel_id"), F.col("node_name").alias("rel_name"))
     members = nodes.filter(F.col("node_type") == NodeType.GROUP).select(
         F.col("parent_id").alias("rel_ref"),
         F.col("pos").alias("m_pos"),
@@ -137,7 +131,7 @@ def relation_pairs(nodes: DataFrame, rel_name: str) -> DataFrame:
     w = Window.partitionBy("rel_id").orderBy("m_pos")
     paired = (
         joined.withColumn("rn", F.row_number().over(w))
-        .groupBy("rel_id")
+        .groupBy("rel_id", "rel_name")
         .agg(
             F.max(F.when(F.col("rn") == 1, F.col("m_group"))).alias("left_group"),
             F.max(F.when(F.col("rn") == 1, F.col("m_oid"))).alias("left_oid"),
@@ -181,12 +175,14 @@ def export_sql_frames(
     nodes: DataFrame, schema: SchemaPlan, *, typed: bool = False
 ) -> dict[str, DataFrame]:
     """All frames ready for ``write.jdbc``: per-group frames with FK columns
-    joined in from the REL pairs, plus join-table frames for n-n.
+    joined in from the REL pairs, plus join-table frames for n-n.  Lands
+    the group instances and, when the schema has relations, the REL pairs
+    at call time (one eager barrier each); every returned frame reads only those.
 
     ``typed=True`` runs the reference's export-time parse chain
     (``export/sql.py:262-300``) over each group frame's entity columns —
     see :mod:`architxt_spark.sinks.types` (OID/FK columns stay strings)."""
-    frames = {g: group_frame(nodes, g) for g in schema.groups}
+    frames = group_frames(nodes, schema)
     if typed:
         from architxt_spark.sinks.types import apply_typed_casts, infer_column_types
 
@@ -197,12 +193,15 @@ def export_sql_frames(
             for g, df in frames.items()
         }
 
+    if not schema.relations:
+        return frames
+    pairs = stage_barrier(relation_pairs(nodes, (r.name for r in schema.relations)))
     for rel_name, many, one, fk in _rel_sides(schema):
-        pairs = relation_pairs(nodes, rel_name)
-        many_side = pairs.filter(F.col("left_group") == many).select(
+        rel = pairs.filter(F.col("rel_name") == rel_name)
+        many_side = rel.filter(F.col("left_group") == many).select(
             F.col("left_oid").alias("_m_oid"), F.col("right_oid").alias(fk)
         ).unionByName(
-            pairs.filter((F.col("right_group") == many) & (F.col("left_group") != many)).select(
+            rel.filter((F.col("right_group") == many) & (F.col("left_group") != many)).select(
                 F.col("right_oid").alias("_m_oid"), F.col("left_oid").alias(fk)
             )
         ).dropDuplicates(["_m_oid"])
@@ -213,10 +212,10 @@ def export_sql_frames(
 
     for rel in sorted(schema.relations, key=lambda r: r.name):
         if rel.orientation == RelationOrientation.BOTH:
-            pairs = relation_pairs(nodes, rel.name)
+            rel_pairs = pairs.filter(F.col("rel_name") == rel.name)
             assoc = f"{rel.left}_{rel.right}_assoc"
             lcol, rcol = _fk_col(rel.left), _fk_col(rel.right)
-            frames[assoc] = pairs.select(
+            frames[assoc] = rel_pairs.select(
                 F.when(F.col("left_group") == rel.left, F.col("left_oid"))
                 .otherwise(F.col("right_oid"))
                 .alias(lcol),

@@ -630,3 +630,21 @@ def test_cli_curate_token_budget_mixture(spark, tmp_path, capsys):
     _, c1 = curate_corpus(d, quality_model_pos=pos, quality_model_neg=neg)
     _, c2 = curate_corpus(d, quality_model_weights=w)
     assert sorted(map(tuple, c1.collect())) == sorted(map(tuple, c2.collect()))
+
+
+def test_curate_corpus_rejects_internal_column_name(spark, count_jobs):
+    """An input column named like the classifier gate's internal column
+    fails at the driver with the column's name, before any Spark job."""
+    import pytest as _pytest
+
+    from architxt_spark.functions.curation import curate_corpus
+
+    df = spark.createDataFrame(
+        [(1, "some text here", True)], "doc_id long, text string, __cls_keep boolean"
+    )
+
+    def run():
+        with _pytest.raises(ValueError, match="__cls_keep"):
+            curate_corpus(df)
+
+    assert count_jobs(run) == 0

@@ -2,12 +2,14 @@
 frames + script (reference parity: ``architxt/database/export/sql.py``,
 ``export/cypher.py``, collapsible groups ``architxt/schema.py:442-501``)."""
 
+import re
 import sqlite3
 
 import pytest
 from pyspark.sql import functions as F
 
-from architxt_spark.plans import schema_from_forest
+from architxt_spark import pipeline
+from architxt_spark.plans import extract_datasets, schema_from_forest
 from architxt_spark.plans.schema import Relation, RelationOrientation, SchemaPlan
 from architxt_spark.sinks import (
     cypher_node_frames,
@@ -120,3 +122,52 @@ def test_export_sql_frames_typed(spark, nation_forest):
     assert dtypes["_architxt_oid"] == "string"  # OID column never re-typed
     keys = sorted(r["n_nationkey"] for r in nation.select("n_nationkey").collect())
     assert keys == list(range(len(keys)))
+
+
+def test_export_with_narrower_schema_matches_ddl(spark, sf_dir, nation_forest, tmp_path):
+    """A caller-supplied schema whose group has fewer entities than the
+    forest: every table frame has exactly the DDL's columns, so the sqlite
+    write succeeds."""
+    schema = SchemaPlan.from_description(groups={"nation": {"n_name"}})
+    frames = export_sql_frames(nation_forest, schema)
+    [ddl] = schema_ddl(schema)
+    ddl_cols = re.findall(r'"([^"]+)" VARCHAR', ddl)
+    assert frames["nation"].columns == ddl_cols == ["_architxt_oid", "n_name"]
+    db = str(tmp_path / "narrow.db")
+    write_sqlite(frames, [ddl], db, insert_order(schema))
+    con = sqlite3.connect(db)
+    try:
+        names = {r[0] for r in con.execute('SELECT "n_name" FROM "nation"')}
+    finally:
+        con.close()
+    src = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    assert names == {r["n_name"] for r in src.collect()}
+
+
+def test_group_extraction_and_export_job_counts(nation_forest, count_jobs, tmp_path):
+    """Pin the Spark job counts of dataset extraction and SQL export on
+    the nation forest (two groups, one relation).  Both land one shared
+    group-instance frame instead of re-deriving it from the forest per
+    group; a change that brings back per-group forest passes raises these
+    counts."""
+    schema = schema_from_forest(nation_forest, keep_unlabelled=False)
+    assert set(schema.groups) == {"nation", "region"}
+
+    def extract():
+        for df in extract_datasets(nation_forest, schema).values():
+            df.count()
+
+    def export():
+        ddl, frames, order = pipeline.export_sql(nation_forest, schema)
+        write_sqlite(frames, ddl, str(tmp_path / "pin.db"), order)
+
+    assert count_jobs(extract) == 14
+    assert count_jobs(export) == 17
+
+
+def test_cypher_export_job_count(nation_forest, count_jobs):
+    """Pin the Spark job count of a whole Cypher script export on the
+    nation forest: node frames and edge frames share one landed
+    group-instance frame and one landed REL-pair frame."""
+    schema = schema_from_forest(nation_forest, keep_unlabelled=False)
+    assert count_jobs(lambda: export_cypher_script(nation_forest, schema)) == 16
