@@ -1121,34 +1121,6 @@ def q_bpe_train_merges(spark: SparkSession, sf: str) -> DataFrame:
     return bpe.train_bpe_merges(_t(spark, sf, "documents").select("text"), n_merges=6)
 
 
-def q_bpe_encode_counts(spark: SparkSession, sf: str) -> DataFrame:
-    """Train-then-apply tokenizer pair: learn 6 BPE merges on the corpus
-    (one wordcount job + driver-local merge loop on the vocab-bounded
-    frame), then greedy-encode every word occurrence with the merge chain
-    folded into literal codegen replaces — one map-side pass — and count
-    the resulting tokens (`functions/bpe.py`)."""
-    from architxt_spark.functions import bpe
-
-    docs = _t(spark, sf, "documents").select("doc_id", "text")
-    merges = bpe.train_bpe_merges(docs, n_merges=6)
-    return (
-        bpe.bpe_encode(docs, merges)
-        .groupBy("token")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-def q_bpe_vocab(spark: SparkSession, sf: str) -> DataFrame:
-    """Tokenizer vocabulary induced by the trained merge table: corpus
-    character alphabet (id-ordered) + merges in training order — ids are
-    prefix-stable under retraining (`functions/bpe.py` vocab_from_merges)."""
-    from architxt_spark.functions import bpe
-
-    docs = _t(spark, sf, "documents").select("text")
-    merges = bpe.train_bpe_merges(docs, n_merges=6)
-    return bpe.vocab_from_merges(docs, merges)
-
-
 #: BM25 demo query: a fixed small bag of terms from the corpus vocabulary.
 _BM25_TERMS = ["spark", "vector", "stream"]
 
@@ -2525,21 +2497,6 @@ def q_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
     emb = _t(spark, sf, "embeddings")
     _idx, cb = ivf_serving_index(spark, sf)  # same deterministic codebook
     return ann.semantic_dedup(emb, n_cells=16, threshold=0.35, centroids=cb)
-
-
-
-def q_dsir_scores(spark: SparkSession, sf: str) -> DataFrame:
-    """DSIR importance weighting (Xie et al. 2023): hashed word
-    unigram+bigram bucket models of a target slice (doc_id < 25 stands in
-    for the vetted corpus) vs the raw corpus; per-doc mean log probability
-    ratio with DECIMAL summation.  Bucket tables are bounded and
-    broadcast; the only data-row shuffle is the per-doc sum
-    (`functions/dsir.py`)."""
-    from architxt_spark.functions import dsir
-
-    docs = _t(spark, sf, "documents").select("doc_id", "text")
-    return dsir.dsir_scores(docs, docs.filter(F.col("doc_id") < 25))
-
 
 
 _DSIR_MODEL_CACHE: dict = {}

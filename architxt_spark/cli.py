@@ -39,19 +39,7 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _session(app: str, cpus: str | None = None) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"architxt-spark-{app}")
-        .config("spark.sql.shuffle.partitions", os.cpu_count() or 8)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+from architxt_spark.session import get_spark
 
 
 def _write_nodes(nodes: DataFrame, out: str) -> None:
@@ -66,7 +54,7 @@ def _read_nodes(spark: SparkSession, path: str) -> DataFrame:
 def _cmd_load_document(args: argparse.Namespace) -> None:
     from architxt_spark.sources.documents import read_document_file
 
-    spark = _session("load-document")
+    spark = get_spark("architxt-spark-load-document")
     frames = [
         read_document_file(spark, p, root_name=args.root_name, raw_read=args.raw_read, sample=args.sample)
         for p in args.files
@@ -80,7 +68,7 @@ def _cmd_load_document(args: argparse.Namespace) -> None:
 def _cmd_load_corpus(args: argparse.Namespace) -> None:
     from architxt_spark.pipeline import load_corpus
 
-    spark = _session("load-corpus")
+    spark = get_spark("architxt-spark-load-corpus")
     rows = []
     for name in sorted(os.listdir(args.directory)):
         if not name.endswith(".txt"):
@@ -113,7 +101,7 @@ def _cmd_load_sql(args: argparse.Namespace) -> None:
     from architxt_spark.pipeline import load_sql
     from architxt_spark.sources.relational import FK
 
-    spark = _session("load-sql")
+    spark = get_spark("architxt-spark-load-sql")
     with open(args.metadata) as f:
         meta = json.load(f)
     tables = {t: spark.read.parquet(p) for t, p in meta["tables"].items()}
@@ -132,7 +120,7 @@ def _cmd_load_sql(args: argparse.Namespace) -> None:
 def _cmd_load_graph(args: argparse.Namespace) -> None:
     from architxt_spark.pipeline import load_graph
 
-    spark = _session("load-graph")
+    spark = get_spark("architxt-spark-load-graph")
     nodes = load_graph(
         spark.read.parquet(args.nodes),
         spark.read.parquet(args.rels),
@@ -144,7 +132,7 @@ def _cmd_load_graph(args: argparse.Namespace) -> None:
 def _cmd_simplify(args: argparse.Namespace) -> None:
     from architxt_spark.pipeline import simplify
 
-    spark = _session("simplify")
+    spark = get_spark("architxt-spark-simplify")
     nodes = _read_nodes(spark, args.nodes)
     if getattr(args, "llm", False):
         # reference `simplify_llm` (`cli/__init__.py:189`): an LLM
@@ -170,7 +158,7 @@ def _cmd_compare(args: argparse.Namespace) -> None:
     from architxt_spark.metrics import coverage, entity_oids, forest_stats
     from architxt_spark.model import NodeType
 
-    spark = _session("compare")
+    spark = get_spark("architxt-spark-compare")
     src = _read_nodes(spark, args.src)
     dst = _read_nodes(spark, args.dst)
 
@@ -218,7 +206,7 @@ def _cmd_export_sql(args: argparse.Namespace) -> None:
     from architxt_spark.pipeline import export_sql
     from architxt_spark.sinks import write_sqlite
 
-    spark = _session("export-sql")
+    spark = get_spark("architxt-spark-export-sql")
     nodes = _read_nodes(spark, args.nodes)
     ddl, frames, order = export_sql(nodes, typed=args.typed)
     if args.ddl_only:
@@ -231,7 +219,7 @@ def _cmd_export_sql(args: argparse.Namespace) -> None:
 def _cmd_export_cypher(args: argparse.Namespace) -> None:
     from architxt_spark.pipeline import export_cypher
 
-    spark = _session("export-cypher")
+    spark = get_spark("architxt-spark-export-cypher")
     nodes = _read_nodes(spark, args.nodes)
     node_frames, rel_frames = export_cypher(nodes)
     for label, df in node_frames.items():
@@ -247,7 +235,7 @@ def _cmd_export_cypher(args: argparse.Namespace) -> None:
 def _cmd_export_jsonl(args: argparse.Namespace) -> None:
     from architxt_spark.trees import write_jsonl_forest
 
-    spark = _session("export-jsonl")
+    spark = get_spark("architxt-spark-export-jsonl")
     write_jsonl_forest(_read_nodes(spark, args.nodes), args.out)
     print(f"wrote JSONL forest: {args.out}")
 
@@ -255,14 +243,14 @@ def _cmd_export_jsonl(args: argparse.Namespace) -> None:
 def _cmd_load_jsonl(args: argparse.Namespace) -> None:
     from architxt_spark.trees import read_jsonl_forest
 
-    spark = _session("load-jsonl")
+    spark = get_spark("architxt-spark-load-jsonl")
     _write_nodes(read_jsonl_forest(spark, args.path), args.out)
 
 
 def _cmd_stats(args: argparse.Namespace) -> None:
     from architxt_spark.metrics import forest_stats
 
-    spark = _session("stats")
+    spark = get_spark("architxt-spark-stats")
     print(json.dumps(forest_stats(_read_nodes(spark, args.nodes)), indent=2, default=str))
 
 
@@ -272,7 +260,7 @@ def _cmd_merge(args: argparse.Namespace) -> None:
     corpus's sidecar indexes, survivors appended; prints the census."""
     from architxt_spark.sinks.corpus import merge_corpus
 
-    spark = _session("merge")
+    spark = get_spark("architxt-spark-merge")
     census = merge_corpus(
         spark,
         args.corpus,
@@ -293,7 +281,7 @@ def _cmd_drift(args: argparse.Namespace) -> None:
     tokens by Jeffreys contribution and the total."""
     from architxt_spark.functions.text import corpus_drift
 
-    spark = _session("drift")
+    spark = get_spark("architxt-spark-drift")
     drift = corpus_drift(
         spark.read.parquet(args.corpus_a),
         spark.read.parquet(args.corpus_b),
@@ -315,7 +303,7 @@ def _cmd_report(args: argparse.Namespace) -> None:
     curation run publishes next to the corpus."""
     from architxt_spark.functions.report import corpus_report
 
-    spark = _session("report")
+    spark = get_spark("architxt-spark-report")
     docs = spark.read.parquet(args.docs)
     rep = corpus_report(
         docs,
@@ -334,7 +322,7 @@ def _cmd_generate(args: argparse.Namespace) -> None:
     from architxt_spark.generator import gen_instance
     from architxt_spark.plans.schema import Relation, SchemaPlan
 
-    spark = _session("generate")
+    spark = get_spark("architxt-spark-generate")
     schema = SchemaPlan.from_description(
         groups={
             "SOSY": frozenset({"SOSY", "ANATOMIE", "SUBSTANCE"}),
@@ -361,7 +349,7 @@ def _cmd_cleanup(args: argparse.Namespace) -> None:
     from architxt_spark.metrics import forest_stats
     from architxt_spark.plans.schema import extract_valid_trees, schema_from_forest
 
-    spark = _session("cleanup")
+    spark = get_spark("architxt-spark-cleanup")
     nodes = _read_nodes(spark, args.nodes)
     schema = schema_from_forest(nodes, keep_unlabelled=False)
     print(schema.as_cfg())
@@ -383,7 +371,7 @@ def _cmd_curate(args: argparse.Namespace) -> None:
 
     from architxt_spark.functions.curation import curate_corpus
 
-    spark = _session("curate")
+    spark = get_spark("architxt-spark-curate")
     if args.jvm_nfc:
         try:
             from architxt_spark.jvm import register_jvm_nfc
@@ -500,7 +488,7 @@ def _cmd_compact(args: argparse.Namespace) -> None:
     touch the original layout unless the recomputed manifest verifies."""
     from architxt_spark.sinks.corpus import compact_corpus
 
-    spark = _session("compact")
+    spark = get_spark("architxt-spark-compact")
     manifest = compact_corpus(
         spark,
         args.path,
@@ -519,7 +507,7 @@ def _cmd_verify_corpus(args: argparse.Namespace) -> None:
 
     from architxt_spark.sinks.corpus import verify_corpus
 
-    spark = _session("verify-corpus")
+    spark = get_spark("architxt-spark-verify-corpus")
     rows = verify_corpus(spark, args.path, text_col=args.text_col).collect()
     bad = 0
     for r in rows:

@@ -8,9 +8,9 @@ path rides the public **neo4j-spark-connector**
 DataFrames with the connector's ``<id>`` / ``<labels>`` / ``<rel.type>`` /
 ``<source.id>`` / ``<target.id>`` columns, which :func:`normalize_nodes` /
 :func:`normalize_relationships` map onto the frame shapes
-``sources/graph.read_graph`` already consumes — and the exporter's
-``sinks/cypher.cypher_node_frames`` / ``cypher_relationship_frames``
-outputs are written back with the connector's ``labels`` /
+``sources/graph.read_graph`` already consumes — and the node and
+relationship frames of the exporter's ``sinks/cypher.cypher_frames`` are
+written back with the connector's ``labels`` /
 ``relationship`` save modes keyed on the indexed ``_architxt_oid``
 (mirroring the reference's MERGE-on-oid protocol).
 

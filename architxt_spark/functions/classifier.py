@@ -259,10 +259,18 @@ def classifier_margin_expr(
 
     ``weight_rows``: iterable of ``(b, w)`` pairs (e.g.
     ``weights.collect()`` — the weight frame is driver-local and bounded).
+    A bucket outside ``[0, n_buckets)`` raises :class:`ValueError`: the
+    model was trained with a different bucket count.
     """
     arr = [0] * n_buckets
     for r in weight_rows:
-        arr[int(r[0])] = int(r[1])
+        b = int(r[0])
+        if not 0 <= b < n_buckets:
+            raise ValueError(
+                f"classifier weight bucket {b} is outside [0, {n_buckets}): "
+                f"the model was not trained with n_buckets={n_buckets}"
+            )
+        arr[b] = int(r[1])
     # ONE py4j round trip for the whole table (vs 1024 F.lit calls)
     warr = F.expr("array(" + ",".join(f"{w}L" for w in arr) + ")")
     toks = T.tokens(text)

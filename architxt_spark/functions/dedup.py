@@ -110,17 +110,6 @@ def exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def exact_duplicates_sql(table: str, text_col: str, id_col: str) -> str:
-    return f"""
-        SELECT {T.fingerprint_sql(text_col)} AS fingerprint,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               MIN({id_col}) AS keep_id
-        FROM {table}
-        GROUP BY 1
-        HAVING COUNT(*) > 1
-    """
-
-
 # ---------------------------------------------------------------------------
 # minhash + LSH
 # ---------------------------------------------------------------------------
@@ -176,19 +165,6 @@ def _shingle_rows(
         sh = sh.persist()
         holds.append(sh)
     return sh.select("id", F.explode("sh").alias("s"))
-
-
-def _shingle_int_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, hs): 28-bit shingle ints (first 7 hex digits of md5).  ONE md5
-    per distinct shingle, materialized behind a barrier so the k
-    permutations never re-hash."""
-    sh = _shingle_frame(df, text_col, id_col)
-    return sh.select(
-        "id",
-        F.transform(
-            F.col("sh"), lambda s: F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("long")
-        ).alias("hs"),
-    )
 
 
 def minhash_signature_of_ints(hs: Column, k: int = MINHASH_K) -> Column:

@@ -168,24 +168,16 @@ def pagerank(
     )
     ranks = nodes.select("node", F.lit(r0).cast("long").alias("rank_units"))
     # Iterations CHAIN LAZILY (r15): each rank frame is consumed once by
-    # the next iteration's contribution join (twice with dangling
-    # redistribution, where a lazy persist de-duplicates the evaluation),
-    # so the whole fixed-iteration loop is ONE action at the consumer
+    # the next iteration's contribution join (the dangling variant, which
+    # reads it twice, barriers every iteration — see below), so the
+    # whole fixed-iteration loop is ONE action at the consumer
     # instead of one eager localCheckpoint job + its AQE stage jobs +
     # driver round-trips PER ITERATION (optprof: the line was a stream of
     # 20-40 ms scheduling-bound jobs).  An eager barrier still lands
     # every ``_PR_BARRIER_INTERVAL`` iterations — and always on the LAST
     # one — so plan depth stays O(interval), the same lineage bound as
     # before; values are placement-independent (exact integer ops).
-    held: list[DataFrame] = []
-    ranks_lazy = False
     for it in range(1, iters + 1):
-        if dangling is not None and ranks_lazy:
-            # consumed by both the contribution join and the dangling
-            # 1-row aggregate: cache the lazy frame so the iteration
-            # is not evaluated twice (released after the next barrier)
-            ranks = ranks.persist()
-            held.append(ranks)
         contrib = (
             e2.join(ranks.withColumnRenamed("node", "__s"), F.col(src) == F.col("__s"))
             .select(
@@ -228,12 +220,6 @@ def pagerank(
             # broadcast-exchange builds measured SLOWER than the
             # barriered form (A/B at sf0.1) — only the linear chain wins
             ranks = stage_barrier(ranks)
-            ranks_lazy = False
-            for h in held:
-                h.unpersist()
-            held.clear()
-        else:
-            ranks_lazy = True
         if tol_units is not None:
             delta = (
                 ranks.join(

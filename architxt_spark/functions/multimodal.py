@@ -76,12 +76,6 @@ def with_byte_metadata(df: DataFrame, content_col: str = "content") -> DataFrame
     )
 
 
-def repartition_by_bytes(df: DataFrame, total_bytes: int, target_partition_bytes: int = 128 << 20) -> DataFrame:
-    """Size partitions by byte budget — media rows are huge, row counts lie."""
-    n = max(1, total_bytes // target_partition_bytes)
-    return df.repartition(n)
-
-
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
 
@@ -851,15 +845,6 @@ def decode_png_pixels(content: bytes) -> tuple[int, int, int, bytes]:
         mask = (1 << bit_depth) - 1
         return width, height, 1, bytes(v * 255 // mask for v in samples)
     return width, height, nch_raw, bytes(samples)
-
-
-def fake_decode_dims(content: bytes) -> tuple[int, int]:
-    """Deterministic FAKE decoder for tests: derives dimensions from the
-    content hash.  Clearly not a real codec."""
-    import hashlib
-
-    h = hashlib.md5(content or b"").digest()
-    return (h[0] % 64 + 1, h[1] % 64 + 1)
 
 
 def extract_features(

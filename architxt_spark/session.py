@@ -1,8 +1,13 @@
-"""SparkSession factory with scale-aware defaults.
+"""The engine's session profile.
 
-Local runs use ``local[N]``; on a real cluster the same builder options
-apply unchanged (AQE re-plans shuffles at runtime, handles skew joins, and
-coalesces small partitions — the knobs that matter at 100 TB).
+:func:`get_spark` is the one place a ``SparkSession`` is built: the CLI,
+the UI, the test suite and the tools all call it, so every run shares
+one profile.  The semantic confs live once, in :data:`ENGINE_CONF`;
+:func:`get_spark` adds the local settings (``local[cores]``, driver
+memory, no UI) and :func:`cluster_conf` adds the cluster posture.  On a
+real cluster the same confs apply unchanged (AQE re-plans shuffles at
+runtime, handles skew joins, and coalesces small partitions — the knobs
+that matter at 100 TB).
 """
 
 from __future__ import annotations
@@ -11,26 +16,52 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Engine optimizer profile: ``InferFiltersFromGenerate`` copies the ENTIRE
+#: generator-input expression into an inferred ``size(...) > 0 AND
+#: isnotnull(...)`` filter.  For the wide struct-array node emitters the
+#: array templates are non-null by construction, so the inferred filter
+#: never prunes a row but re-evaluates the whole emission expression once
+#: extra per input row (~20-25% on the relational loader at sf0.1).  This
+#: is declared HERE, at session construction, as the engine's default —
+#: operator code never mutates conf on a session it did not create.
+EXCLUDED_OPTIMIZER_RULES = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
-def get_spark(app_name: str = "architxt-spark", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+#: The engine's semantic confs, shared by every local session
+#: (:func:`get_spark`) and by the cluster posture (:func:`cluster_conf`).
+ENGINE_CONF: dict[str, str] = {
+    # Pin UTC so timestamp semantics match the UTC-naive parquet/duckdb view.
+    "spark.sql.session.timeZone": "UTC",
+    # AQE: runtime shuffle re-planning, small-partition coalescing, and
+    # skew-join splitting — essential at scale, harmless locally.
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Arrow for every pandas UDF / mapInPandas boundary.
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.optimizer.excludedRules": EXCLUDED_OPTIMIZER_RULES,
+}
+
+
+def get_spark(app_name: str = "architxt-spark", cores: int | None = None) -> SparkSession:
+    """The engine session: :data:`ENGINE_CONF` on ``local[cores]`` with
+    ``cores`` shuffle partitions.  ``cores`` defaults to
+    ``$SPARK_GRAFT_CPUS``, then to every CPU; the driver heap is
+    ``$SPARK_GRAFT_DRIVER_MEM`` (default 8g).  A session already running
+    in this process is returned unchanged: its master and memory are
+    fixed, and re-applying the session options would overwrite its
+    shuffle width."""
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     return (
         SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        # Pin UTC so timestamp semantics match the UTC-naive parquet/duckdb view.
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # AQE: runtime shuffle re-planning, small-partition coalescing, and
-        # skew-join splitting — essential at scale, harmless locally.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow for every pandas UDF / mapInPandas boundary.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES)
+        .master(f"local[{cores}]")
+        .config(map=ENGINE_CONF)
+        .config("spark.sql.shuffle.partitions", str(cores))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
 
@@ -130,8 +161,10 @@ def cluster_conf(
       ceiling rather than splitting up (it can only merge);
     - ``maxPartitionBytes`` sizes scan splits so a task's working set
       fits executor memory with room for shuffle spill;
-    - AQE on, with skew-join splitting — the runtime guard for the skew
-      this engine cannot know statically;
+    - :data:`ENGINE_CONF`, the same semantic confs every local session
+      runs: UTC, Arrow, the optimizer profile, and AQE with skew-join
+      splitting — the runtime guard for the skew this engine cannot know
+      statically;
     - broadcast threshold raised to 256 MB: at 1000 executors a
       shuffle-hash join of a dimension table costs three orders of
       magnitude more network than one broadcast;
@@ -139,15 +172,11 @@ def cluster_conf(
       executor loss is an EXPECTED event at this scale."""
     total_cores = executors * executor_cores
     return {
+        **ENGINE_CONF,
         "spark.sql.shuffle.partitions": str(2 * total_cores),
         "spark.sql.files.maxPartitionBytes": str(target_partition_mb << 20),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(64 << 20),
         "spark.sql.autoBroadcastJoinThreshold": str(256 << 20),
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.optimizer.excludedRules": EXCLUDED_OPTIMIZER_RULES,
         DURABLE_BARRIERS_CONF: "true",
     }
 
@@ -169,13 +198,3 @@ def read_parquet_if_exists(spark: SparkSession, path: str):
             return None
         raise
 
-
-#: Engine optimizer profile: ``InferFiltersFromGenerate`` copies the ENTIRE
-#: generator-input expression into an inferred ``size(...) > 0 AND
-#: isnotnull(...)`` filter.  For the wide struct-array node emitters the
-#: array templates are non-null by construction, so the inferred filter
-#: never prunes a row but re-evaluates the whole emission expression once
-#: extra per input row (~20-25% on the relational loader at sf0.1).  This
-#: is declared HERE, at session construction, as the engine's default —
-#: operator code never mutates conf on a session it did not create.
-EXCLUDED_OPTIMIZER_RULES = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"

@@ -89,31 +89,24 @@ def _relationship_frames(
     return out
 
 
-def cypher_node_frames(nodes: DataFrame, schema: SchemaPlan) -> dict[str, DataFrame]:
-    """One frame per NON-collapsible group: (oid PK + entity property
-    columns) — writable with the connector's node mode (``MERGE`` on the
-    indexed ``_architxt_oid``, ``export/cypher.py:75-104``).  All frames
-    pivot one landed group-instance frame (:func:`~architxt_spark.sinks.sql.group_frames`)."""
-    collapsed = schema.find_collapsible_groups()
-    return group_frames(nodes, schema, [g for g in schema.groups if g not in collapsed])
-
-
-def cypher_relationship_frames(nodes: DataFrame, schema: SchemaPlan) -> dict[str, DataFrame]:
-    """Relationship frames: plain relations → (left_oid, right_oid) edges;
-    a collapsible middle group M (A ← M → B) becomes ONE attributed edge
-    frame A-[M {entity props}]->B (``export/cypher.py:106-134``)."""
-    edges, plain = _edge_plan(schema, schema.find_collapsible_groups())
-    props = group_frames(nodes, schema, [e[0] for e in edges])
-    return _relationship_frames(nodes, edges, plain, props)
-
-
 def cypher_frames(
     nodes: DataFrame, schema: SchemaPlan
 ) -> tuple[dict[str, DataFrame], dict[str, DataFrame]]:
-    """:func:`cypher_node_frames` and :func:`cypher_relationship_frames`
-    together, for a whole export: one landed group-instance frame serves
-    both the node frames and the collapsed edges' properties, and one
-    landed REL-pair frame serves every edge frame."""
+    """The node and relationship frames of a whole export.
+
+    - Node frames: one per NON-collapsible group, (oid PK + entity
+      property columns) — writable with the connector's node mode
+      (``MERGE`` on the indexed ``_architxt_oid``,
+      ``export/cypher.py:75-104``).
+    - Relationship frames: plain relations → (left_oid, right_oid)
+      edges; a collapsible middle group M (A ← M → B) becomes ONE
+      attributed edge frame A-[M {entity props}]->B
+      (``export/cypher.py:106-134``).
+
+    One landed group-instance frame
+    (:func:`~architxt_spark.sinks.sql.group_frames`) serves both the node
+    frames and the collapsed edges' properties, and one landed REL-pair
+    frame serves every edge frame."""
     collapsed = schema.find_collapsible_groups()
     frames = group_frames(nodes, schema)
     edges, plain = _edge_plan(schema, collapsed)

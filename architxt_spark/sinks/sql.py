@@ -85,32 +85,25 @@ def schema_ddl(schema: SchemaPlan, *, dialect: str = "ansi") -> list[str]:
     return stmts
 
 
-def _table_frame(instances: DataFrame, group_name: str, entities: list[str] | None) -> DataFrame:
-    return pivot_instances(instances, group_name, entities, key="oid").withColumnRenamed(
-        "oid", OID_COL
-    )
-
-
-def group_frame(nodes: DataFrame, group_name: str) -> DataFrame:
-    """One row per distinct group OID with entity columns (the keyed twin of
-    ``extract_group_dataset`` — dedup by OID, ``export/sql.py:303-340``):
-    a pivot of :func:`~architxt_spark.plans.schema.group_instances` over the
-    forest's entity names.  :func:`group_frames` is the schema-driven form."""
-    return _table_frame(group_instances(nodes, [group_name]), group_name, None)
-
-
 def group_frames(
     nodes: DataFrame, schema: SchemaPlan, groups: Iterable[str] | None = None
 ) -> dict[str, DataFrame]:
-    """:func:`group_frame` for several of the schema's groups (all when
-    ``groups`` is None) over ONE landed ``group_instances`` frame: one
-    forest pass at call time, then a filter plus a pivot per group whose
-    columns are exactly the schema's (``schema_ddl``'s) entity columns."""
+    """One frame per schema group (all when ``groups`` is None): one row
+    per distinct group OID with entity columns (the keyed twin of
+    ``extract_group_dataset`` — dedup by OID, ``export/sql.py:303-340``).
+    All frames pivot ONE landed
+    :func:`~architxt_spark.plans.schema.group_instances` frame: one forest
+    pass at call time, then a filter plus a pivot per group whose columns
+    are exactly the schema's (``schema_ddl``'s) entity columns."""
     names = sorted(schema.groups if groups is None else groups)
     if not names:
         return {}
     instances = stage_barrier(group_instances(nodes, names))
-    return {g: _table_frame(instances, g, sorted(schema.groups[g])) for g in names}
+    return {
+        g: pivot_instances(instances, g, sorted(schema.groups[g]), key="oid")
+        .withColumnRenamed("oid", OID_COL)
+        for g in names
+    }
 
 
 def relation_pairs(nodes: DataFrame, rel_names: Iterable[str]) -> DataFrame:

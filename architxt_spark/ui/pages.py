@@ -17,13 +17,8 @@ import tempfile
 
 from architxt_spark.labelling import Renaming, StubChatModel
 from architxt_spark.plans.schema import SchemaPlan, extract_group_dataset
-from architxt_spark.ui.state import (
-    get_forest,
-    get_schema,
-    get_spark,
-    st,
-    update_metrics,
-)
+from architxt_spark.session import get_spark
+from architxt_spark.ui.state import get_forest, get_schema, st, update_metrics
 
 MAX_LINE = 100  # reference visualizer.py:11
 

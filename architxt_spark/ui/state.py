@@ -18,10 +18,9 @@ from __future__ import annotations
 import tempfile
 from typing import Any
 
-from pyspark.sql import SparkSession
-
 from architxt_spark.bucket import ParquetTreeBucket
 from architxt_spark.plans.schema import SchemaPlan, schema_from_forest
+from architxt_spark.session import get_spark
 
 _ST: Any = None
 
@@ -54,20 +53,6 @@ def st() -> Any:
         ) from e
     _ST = streamlit
     return streamlit
-
-
-def get_spark() -> SparkSession:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        return active
-    return (
-        SparkSession.builder.master("local[*]")
-        .appName("architxt-spark-ui")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
 
 
 def get_forest() -> ParquetTreeBucket:

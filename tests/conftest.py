@@ -1,25 +1,13 @@
 import uuid
 
 import pytest
-from pyspark.sql import SparkSession
 
-from architxt_spark.session import EXCLUDED_OPTIMIZER_RULES
+from architxt_spark.session import get_spark
 
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("architxt-spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # the engine's optimizer profile, as get_spark declares it
-        .config("spark.sql.optimizer.excludedRules", EXCLUDED_OPTIMIZER_RULES)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("architxt-spark-tests", cores=4)
     yield spark
     spark.stop()
 

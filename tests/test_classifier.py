@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from architxt_spark.functions.classifier import (
+    classifier_margin_expr,
     classifier_score,
     quality_classifier_sql,
     train_quality_classifier,
@@ -137,3 +138,17 @@ def test_bigram_features_parity_and_effect(spark):
     }
     assert all(got[k][0] > base[k][0] for k in base)
     assert any(got[k][1] != base[k][1] for k in base)
+
+
+def test_margin_expr_rejects_bucket_past_n_buckets(spark):
+    """A weight row for a bucket the model cannot have fails at the
+    driver, naming the bucket and the bucket count."""
+    with pytest.raises(ValueError, match=r"bucket 16 .*n_buckets=16"):
+        classifier_margin_expr(F.col("text"), [(3, 1), (16, 2)], n_buckets=16)
+
+
+def test_margin_expr_rejects_negative_bucket(spark):
+    """A negative bucket would index the weight array from its end and
+    silently overwrite another bucket's weight; it fails instead."""
+    with pytest.raises(ValueError, match=r"bucket -1 .*n_buckets=16"):
+        classifier_margin_expr(F.col("text"), [(15, 5), (-1, 7)], n_buckets=16)

@@ -1,11 +1,16 @@
 """Session factory / cluster-posture artifact tests."""
 
+from pathlib import Path
+
 from architxt_spark.session import (
     DURABLE_BARRIERS_CONF,
+    ENGINE_CONF,
     EXCLUDED_OPTIMIZER_RULES,
     cluster_conf,
     stage_barrier,
 )
+
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def test_cluster_conf_keys_and_scaling():
@@ -29,6 +34,41 @@ def test_cluster_conf_keys_and_scaling():
     assert cluster_conf(executors=10, executor_cores=8)[
         "spark.sql.shuffle.partitions"
     ] == str(160)
+
+
+def test_cluster_conf_carries_engine_conf():
+    """The cluster posture runs the same semantic confs as every local
+    session, the UTC pin included."""
+    conf = cluster_conf()
+    assert conf["spark.sql.session.timeZone"] == "UTC"
+    for key, value in ENGINE_CONF.items():
+        assert conf[key] == value, key
+
+
+def test_suite_runs_engine_profile(spark):
+    """The test session is built by ``get_spark``: the engine's confs on
+    four cores."""
+    for key, value in ENGINE_CONF.items():
+        assert spark.conf.get(key) == value, key
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    assert spark.sparkContext.master == "local[4]"
+
+
+def test_only_session_module_builds_sessions():
+    """``architxt_spark/session.py`` is the only module that builds a
+    Spark session: no other ``.py`` file under ``architxt_spark/``,
+    ``tools/`` or ``tests/`` may build one directly.  ``bench.py``,
+    whose conf stays byte-identical across rounds, and ``perfbench/``,
+    the benchmark harness, are outside the scan."""
+    needle = "SparkSession" + ".builder"
+    session_py = ROOT / "architxt_spark" / "session.py"
+    offenders = [
+        str(path.relative_to(ROOT))
+        for top in ("architxt_spark", "tools", "tests")
+        for path in sorted((ROOT / top).rglob("*.py"))
+        if path != session_py and needle in path.read_text(encoding="utf-8")
+    ]
+    assert offenders == []
 
 
 def test_stage_barrier_local_default(spark):

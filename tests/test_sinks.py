@@ -12,8 +12,7 @@ from architxt_spark import pipeline
 from architxt_spark.plans import extract_datasets, schema_from_forest
 from architxt_spark.plans.schema import Relation, RelationOrientation, SchemaPlan
 from architxt_spark.sinks import (
-    cypher_node_frames,
-    cypher_relationship_frames,
+    cypher_frames,
     export_cypher_script,
     export_sql_frames,
     insert_order,
@@ -86,8 +85,7 @@ def test_sqlite_roundtrip_with_fk(spark, nation_forest, tmp_path):
 
 def test_cypher_frames_and_script(nation_forest):
     schema = schema_from_forest(nation_forest, keep_unlabelled=False)
-    node_frames = cypher_node_frames(nation_forest, schema)
-    rel_frames = cypher_relationship_frames(nation_forest, schema)
+    node_frames, rel_frames = cypher_frames(nation_forest, schema)
     assert set(node_frames) == {"nation", "region"}
     [(rname, rframe)] = rel_frames.items()
     assert rframe.count() == 25  # one edge per nation→region pair

@@ -11,10 +11,11 @@ and once warm.  Usage::
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import architxt_spark.session as S  # noqa: E402
 
@@ -63,22 +64,9 @@ def main() -> None:
     wrap(SA, "pack_sequences")
 
     import __spark_entry__ as entry
-    from pyspark.sql import SparkSession
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("curprof")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+    spark = S.get_spark("curprof")
     spark.sparkContext.setLogLevel("ERROR")
     q = entry.queries()[qname]
     for run in ("cold", "warm", "warm2"):

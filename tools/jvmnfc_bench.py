@@ -71,22 +71,10 @@ def main() -> None:
     args = p.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from pyspark.sql import SparkSession
+    from architxt_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("jvmnfc-bench")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+    spark = get_spark("jvmnfc-bench", cores=int(args.cpus))
     spark.sparkContext.setLogLevel("ERROR")
 
     from architxt_spark.jvm import JVM_NFC_FUNC, register_jvm_nfc

@@ -1,10 +1,10 @@
 """Per-job wall-clock profile of registry queries (r14 optimization round).
 
-Starts a bench-shaped session (local[$SPARK_GRAFT_CPUS], AQE on, shuffle
-partitions = cpus) with the Spark event log enabled, runs each named query
-with the bench action (``.count()`` on the final frame) after a warm-up
-draw, then parses the event log and prints one line per Spark job: start
-offset, duration, #stages, #tasks, and the job group/description if set.
+Starts the engine session (``session.get_spark``) with the Spark event
+log enabled, runs each named query with the bench action (``.count()``
+on the final frame) after a warm-up draw, then parses the event log and
+prints one line per Spark job: start offset, duration, #stages, #tasks,
+and the job group/description if set.
 
 This attributes wall-clock to the *sequence of jobs* a query runs — the
 local-mode equivalent of reading the UI's job timeline — which is the
@@ -24,7 +24,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def profile(spark, entry_mod, name: str, sf: str, log_dir: str, repeats: int = 2):
@@ -97,29 +97,19 @@ def parse_events(log_dir: str):
 def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     names = sys.argv[2:]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     log_dir = tempfile.mkdtemp(prefix="optprof_evlog_")
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("optprof")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", log_dir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        .getOrCreate()
+    # the event log is a launch option, passed before the JVM starts
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.eventLog.enabled=true"
+        f" --conf spark.eventLog.dir={log_dir}"
+        " --conf spark.eventLog.compress=false"
+        " --conf spark.eventLog.rolling.enabled=false pyspark-shell"
     )
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+
+    from architxt_spark.session import get_spark
+
+    spark = get_spark("optprof")
     spark.sparkContext.setLogLevel("ERROR")
     try:
         from architxt_spark.jvm import register_jvm_nfc

@@ -24,9 +24,10 @@ the ``SANCTIONED`` allowlist — CI-able.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 #: query → (flag, reason) pairs that are deliberate plan shapes.
 SANCTIONED: dict[str, dict[str, str]] = {
@@ -94,17 +95,9 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    from pyspark.sql import SparkSession
+    from architxt_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("planaudit")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("planaudit", cores=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry_mod

@@ -21,21 +21,9 @@ def main() -> None:
     names = sys.argv[3:]
     os.makedirs(out_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    from architxt_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("plandump")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        .getOrCreate()
-    )
+    spark = get_spark("plandump", cores=8)
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as entry_mod
 

@@ -28,24 +28,11 @@ def main() -> None:
     p.add_argument("--workdir", default="/tmp/scalebench")
     args = p.parse_args()
 
-    from pyspark.sql import SparkSession
-
+    from architxt_spark.session import get_spark
     from tools.scalebench import gen_documents_dist, gen_forest
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("rewriteprof")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
+    spark = get_spark("rewriteprof", cores=int(args.cpus))
     spark.sparkContext.setLogLevel("ERROR")
 
     from architxt_spark.operators.engine import rewrite

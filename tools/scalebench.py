@@ -364,23 +364,12 @@ def main() -> None:
     )
     args = p.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("scalebench")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        .getOrCreate()
-    )
+    from architxt_spark.session import get_spark
+
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
+    spark = get_spark("scalebench", cores=int(args.cpus))
     spark.sparkContext.setLogLevel("ERROR")
 
     # host-speed stamp (same probes as bench.py): rung EXPONENTS are

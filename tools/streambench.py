@@ -23,7 +23,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(__file__))
 
 
@@ -52,22 +52,10 @@ def main() -> None:
     p.add_argument("--workdir", default="/tmp/streambench")
     args = p.parse_args()
 
-    from pyspark.sql import SparkSession
+    from architxt_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("streambench")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+    spark = get_spark("streambench", cores=int(args.cpus))
     spark.sparkContext.setLogLevel("ERROR")
 
     # host-speed stamp (see bench.py / scalebench.py): per-batch times
