@@ -42,14 +42,6 @@ def _spread(df: DataFrame) -> DataFrame:
     single-threaded hashing).  At real scale inputs already have ≥ cores
     splits, so this is a no-op — no shuffle of bulk data.
 
-    An earlier revision excluded ``InferFiltersFromGenerate`` session-wide
-    here (the inferred ``size(...) > 0`` filter used to duplicate the
-    interpreted shingle chain below the exchange, 7s → 2s at sf0.1).  The
-    exploded-row redesign made that moot — the generator child is now a
-    barrier-projected column, so the inferred filter is cheap (re-measured
-    at sf0.1: 2.61s with the rule vs 2.78s without).  No session conf is
-    mutated anymore.
-
     The small-input check reads ``df.inputFiles()`` — pure metadata, no
     job, and unlike ``df.rdd.getNumPartitions()`` it does not build the
     RDD-conversion plan on every call.  Non-file sources report no files
@@ -136,35 +128,17 @@ def _shingle_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _shingle_rows(
-    df: DataFrame, text_col: str, id_col: str, holds: list | None = None
-) -> DataFrame:
+def _shingle_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, s) rows — one row per DISTINCT shingle per document.  The
     exploded-row form is the fast path: downstream hashing runs row-wise in
     whole-stage codegen instead of per-element inside interpreted
     higher-order functions.
 
-    The shingle arrays are persisted BEFORE the explode: the Generate's
-    inferred ``size(sh) > 0`` filter inlines the interpreted
-    token/shingle chain and re-evaluates it on both sides of the
-    generator — measured 7.4 s vs 0.6 s at sf0.1 for the bare exploded
-    count (same failure mode as `winnow_pairs`; materialize-then-explode
-    is the library rule for every explode over a higher-order chain).
-    ``persist`` rather than a checkpoint barrier keeps lineage intact
-    (executor loss recomputes).  The persist is OPT-IN via ``holds``:
-    pass a list to receive the cache handle (and ``unpersist()`` it once
-    your downstream frame is materialized — the arrays are a within-job
-    scratch index, not a result).  Callers whose first consumer is a
-    map-side aggregation (the minhash signature groupBy) measured
-    FASTER without it — the cache write costs more than the one extra
-    filter-side evaluation there — so they pass ``holds=None``; callers
-    that fan the exploded rows into a self-join index (n-gram Jaccard,
-    winnowing) measured 17.6 s → ~3 s at sf0.1 with it."""
-    sh = _shingle_frame(df, text_col, id_col)
-    if holds is not None:
-        sh = sh.persist()
-        holds.append(sh)
-    return sh.select("id", F.explode("sh").alias("s"))
+    No scratch cache sits before the explode: the engine session profile
+    (``session.ENGINE_CONF``) excludes ``InferFiltersFromGenerate``, so the
+    Generate carries no inferred ``size(sh) > 0`` filter that would inline
+    the interpreted token/shingle chain and evaluate it a second time."""
+    return _shingle_frame(df, text_col, id_col).select("id", F.explode("sh").alias("s"))
 
 
 def minhash_signature_of_ints(hs: Column, k: int = MINHASH_K) -> Column:
@@ -223,15 +197,8 @@ def shingle_md5_rows(
     this frame to each and the corpus is tokenized, shingled, exploded
     and md5-hashed ONCE instead of once per generator.  Caller owns the
     persist: unpersist after the consuming frames are materialized."""
-    holds: list = []
-    rows = (
-        _shingle_rows(df, text_col, id_col, holds)
-        .select("id", F.md5(F.col("s")).alias("m"))
-        .persist()
-    )
+    rows = _shingle_rows(df, text_col, id_col).select("id", F.md5(F.col("s")).alias("m")).persist()
     n = rows.count()  # eager: hash once; every consumer reads the cache
-    for h in holds:
-        h.unpersist()
     return rows, n
 
 
@@ -251,7 +218,11 @@ def minhash_lsh_pairs(
     ``(id, sig)`` frame for ``df`` — callers that need the signature
     frame anyway (:func:`dedup_filter` hands it on to the
     decontamination stage) pass it here so the corpus is scanned and
-    shingle-hashed ONCE per pipeline, not once per consumer.
+    shingle-hashed ONCE per pipeline, not once per consumer; the pair
+    frame then stays lazy over it.  Without ``signatures`` the frame built
+    here is persisted for the band self-join and released before return,
+    so the (small) pair frame comes back materialized behind a
+    :func:`stage_barrier`.
 
     Scale shape: shingles explode to rows so the md5 runs in whole-stage
     codegen (not per-element in an interpreted lambda); the 16 permutation
@@ -270,6 +241,7 @@ def minhash_lsh_pairs(
     (:func:`dedup_filter`) additionally restrict the input to
     exact-duplicate representatives first, which removes the dominant
     hot-band source without changing the keep-set at all."""
+    owned = None
     if signatures is not None:
         base = signatures
     else:
@@ -289,60 +261,64 @@ def minhash_lsh_pairs(
             )
         else:
             base = _signature_frame(df, text_col, id_col)
-        base = base.persist()
+        base = owned = base.persist()
         base.count()  # eager: both self-join branches would otherwise race
         # to materialize the cache and compute the signature pipeline twice
-    # NOTE (r15, measured and REJECTED): carrying ``sig`` through the band
-    # self-join to delete the est-rejoin below was A/B'd in two variants —
-    # est-per-banded-occurrence (2× slower at sf0.1: the interpreted
-    # zip_with ran up to bands× per pair, pre-distinct) and
-    # groupBy+first(sig) (flat at sf0.1; 1M-doc Zipf rung 24.6 s vs
-    # 22.0 s at matched calib; 4M rung 70.7 vs 73.1 s raw on a
-    # slower-probe before-host — no win).  The carried shape also
-    # shuffles ~4× the pair bytes at scale (two 16-long signatures per
-    # candidate row vs two longs), against guide §8's decide-with-small-
-    # rows rule — the rejoin keeps the 64M-pair shuffle at 16 bytes/row
-    # and attaches signatures to the (far smaller) distinct pair set.
-    banded = base.select("id", F.explode(minhash_bands(F.col("sig"))).alias("band"))
-    if max_band_df is not None:
-        heavy = (
-            banded.groupBy("band").count().filter(F.col("count") > max_band_df).select("band")
+    try:
+        # NOTE (r15, measured and REJECTED): carrying ``sig`` through the band
+        # self-join to delete the est-rejoin below was A/B'd in two variants —
+        # est-per-banded-occurrence (2× slower at sf0.1: the interpreted
+        # zip_with ran up to bands× per pair, pre-distinct) and
+        # groupBy+first(sig) (flat at sf0.1; 1M-doc Zipf rung 24.6 s vs
+        # 22.0 s at matched calib; 4M rung 70.7 vs 73.1 s raw on a
+        # slower-probe before-host — no win).  The carried shape also
+        # shuffles ~4× the pair bytes at scale (two 16-long signatures per
+        # candidate row vs two longs), against guide §8's decide-with-small-
+        # rows rule — the rejoin keeps the 64M-pair shuffle at 16 bytes/row
+        # and attaches signatures to the (far smaller) distinct pair set.
+        banded = base.select("id", F.explode(minhash_bands(F.col("sig"))).alias("band"))
+        if max_band_df is not None:
+            heavy = (
+                banded.groupBy("band").count().filter(F.col("count") > max_band_df).select("band")
+            )
+            banded = banded.join(F.broadcast(heavy), "band", "left_anti")
+        a = banded.alias("a")
+        b = banded.alias("b")
+        pairs = (
+            a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.id") < F.col("b.id")))
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .distinct()
         )
-        banded = banded.join(F.broadcast(heavy), "band", "left_anti")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    sa = base.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = base.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-            lambda e: e,
+        sa = base.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
+        sb = base.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
+        est = F.size(
+            F.filter(
+                F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
+                lambda e: e,
+            )
+        ) / F.size(F.col("sig_a"))
+        out = (
+            pairs.join(sa, "id_a")
+            .join(sb, "id_b")
+            .select("id_a", "id_b", F.round(est, 4).alias("est_jaccard"))
         )
-    ) / F.size(F.col("sig_a"))
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", F.round(est, 4).alias("est_jaccard"))
-    )
+        if owned is None:
+            return out  # the caller's signature frame: the caller releases it
+        # materialize the SMALL pair frame, then release the signatures built here
+        return out.transform(stage_barrier)
+    finally:
+        if owned is not None:
+            owned.unpersist()
 
 
-def _signature_frame(
-    df: DataFrame, text_col: str, id_col: str, holds: list | None = None
-) -> DataFrame:
+def _signature_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, sig): the 16-permutation minhash signature frame — the shared
     front half of every banded operator (codegen shingle hashing, ONE
-    map-combinable groupBy).  On a plain parquet scan the shingle scratch
-    persist is a net loss (see `_shingle_rows`), so the default skips it;
-    pass ``holds`` when ``df`` carries an expensive lineage (a gated
-    micro-batch, a semi-joined reps frame) that must not be re-evaluated
-    on both sides of the explode."""
+    map-combinable groupBy).  Nothing is cached on the way: the session
+    profile keeps the explode from re-evaluating the shingle chain (see
+    `_shingle_rows`)."""
     h = F.conv(F.substring(F.md5(F.col("s")), 1, 7), 16, 10).cast("long")
-    hs_rows = _shingle_rows(df, text_col, id_col, holds).select("id", h.alias("h"))
+    hs_rows = _shingle_rows(df, text_col, id_col).select("id", h.alias("h"))
     return (
         hs_rows.groupBy("id")
         .agg(*_minhash_min_aggs())
@@ -677,11 +653,9 @@ def ngram_jaccard_pairs(
     shingles in both engines; parity is unconditional."""
     # no size guard: explode drops empty arrays, and a size() filter
     # gets predicate-pushed through the projection barrier, inlining the
-    # whole shingle chain into the filter (per-element re-evaluation);
-    # _shingle_rows persists the arrays before the explode for the same
-    # reason (scratch handle released below).  persist the exploded
-    # index: the heavy-set aggregation and both self-join sides read it.
-    holds: list = []
+    # whole shingle chain into the filter (per-element re-evaluation).
+    # persist the exploded index: the heavy-set aggregation and both
+    # self-join sides read it.
     if md5_rows is not None:
         # shared md5 front half (see shingle_md5_rows): the fingerprint
         # is a cheap substring+conv over the caller's cached rows — the
@@ -692,13 +666,9 @@ def ngram_jaccard_pairs(
         owned = None
     else:
         fp = F.conv(F.substring(F.md5(F.col("s")), 1, 15), 16, 10).cast("long")
-        raw = (
-            _shingle_rows(df, text_col, id_col, holds).select("id", fp.alias("s")).persist()
-        )
+        raw = _shingle_rows(df, text_col, id_col).select("id", fp.alias("s")).persist()
         n_index = raw.count()  # eager for the same both-branches-race reason as minhash
         owned = raw
-    for hold in holds:
-        hold.unpersist()
     try:
         heavy = raw.groupBy("s").count().filter(F.col("count") > max_shingle_df).select("s")
         inv = raw.join(F.broadcast(heavy), "s", "left_anti")
@@ -1195,6 +1165,22 @@ def connected_components_sql(pairs_sql: str, left: str = "id_a", right: str = "i
 # ---------------------------------------------------------------------------
 
 
+def _winnow_rows(df: DataFrame, text_col: str, id_col: str, n: int, w: int) -> DataFrame:
+    """(id, f) rows — one row per winnowed fingerprint per document.  No
+    scratch cache sits before the explode: the engine session profile
+    (``session.ENGINE_CONF``) excludes ``InferFiltersFromGenerate``, so no
+    inferred ``size(fp) > 0`` filter re-inlines the interpreted winnow
+    chain beside the Generate."""
+    return (
+        _spread(df)
+        .select(F.col(id_col).alias("id"), T.tokens(F.col(text_col)).alias("__t"))
+        .select("id", T.shingles_of_tokens(F.col("__t"), n).alias("__sh"))
+        .select("id", F.transform("__sh", lambda s: F.md5(s)).alias("__h"))
+        .select("id", T.winnow_of_hashes(F.col("__h"), w).alias("fp"))
+        .select("id", F.explode("fp").alias("f"))
+    )
+
+
 def winnow_pairs(
     df: DataFrame,
     text_col: str,
@@ -1214,26 +1200,13 @@ def winnow_pairs(
     screening.  Same index shape: explode, DF-cap the degenerate
     fingerprints (broadcast anti-join), self-join, count per pair.
 
-    The fingerprint frame is PERSISTED before the explode:
-    CollapseProject re-inlines the stepwise chain into the Generate's
-    inferred ``size(fp) > 0`` filter, and the interpreted higher-order
-    winnow then re-evaluates per row on both sides of it (benched 224 s
-    vs 4 s at sf0.1 — same failure mode the library's "never pass a raw
-    shingle chain into an exploded hot path" rule exists for; see
-    `_shingle_rows` for why persist, not a checkpoint barrier).  The
-    exploded index is additionally persisted: the heavy-set aggregate
-    and both self-join sides read it."""
-    base = (
-        _spread(df)
-        .select(F.col(id_col).alias("id"), T.tokens(F.col(text_col)).alias("__t"))
-        .select("id", T.shingles_of_tokens(F.col("__t"), n).alias("__sh"))
-        .select("id", F.transform("__sh", lambda s: F.md5(s)).alias("__h"))
-        .select("id", T.winnow_of_hashes(F.col("__h"), w).alias("fp"))
-        .persist()
-    )
-    raw = base.select("id", F.explode("fp").alias("f")).persist()
+    The fingerprint arrays explode straight into the index with no
+    scratch cache: the session profile keeps the explode from
+    re-evaluating the winnow chain (see `_winnow_rows`).  The exploded
+    index is persisted: the heavy-set aggregate and both self-join sides
+    read it."""
+    raw = _winnow_rows(df, text_col, id_col, n, w).persist()
     n_index = raw.count()  # eager: hash once; heavy-set agg + self-join read the cache
-    base.unpersist()  # scratch arrays folded into the exploded index now
     try:
         heavy = raw.groupBy("f").count().filter(F.col("count") > max_fp_df).select("f")
         inv = raw.join(F.broadcast(heavy), "f", "left_anti")

@@ -164,7 +164,10 @@ def llm_rewrite(
                 out_rows.extend(tree_to_rows(t, tid))
         yield pd.DataFrame(out_rows, columns=cols)
 
-    return nodes.repartition("tree_id").mapInPandas(run, NODE_SCHEMA)
+    # explicit width: a count-less repartition is AQE-coalescible, and a
+    # few MB of node rows would fold into fewer tasks than cores
+    width = nodes.sparkSession.sparkContext.defaultParallelism
+    return nodes.repartition(width, "tree_id").mapInPandas(run, NODE_SCHEMA)
 
 
 def sanitize_forest(nodes: DataFrame) -> DataFrame:

@@ -11,9 +11,9 @@ with early-exit at the first op class that changed anything, to fixpoint
 
 Scale design:
 
-- the forest DataFrame is hash-partitioned by ``tree_id`` once; every
-  ``applyInPandas`` group-map then reuses that partitioning (no extra
-  shuffle per op);
+- every per-tree pass groups through ``session.tree_buckets``: one
+  pinned-width exchange on a hash bucket of ``tree_id`` per pass, many
+  whole trees per pandas call;
 - find_groups is FUSED into the per-tree passes (its eligibility is
   tree-local given the broadcast signature index,
   ``similarity.find_groups_in_tree``) — no per-iteration join pipeline
@@ -449,13 +449,6 @@ def rewrite(
     n_trees = nodes.select("tree_id").distinct().count()
     if min_support is None:
         min_support = max(n_trees // 10, 2)
-
-    # explicit width: repartition("tree_id") without a count is AQE-
-    # coalescible, and a few MB of node rows collapse to ONE task —
-    # serializing every per-tree applyInPandas pass of the whole loop
-    nodes = nodes.repartition(
-        nodes.sparkSession.sparkContext.defaultParallelism, "tree_id"
-    ).transform(stage_barrier)
 
     def census(frame: DataFrame) -> dict:
         types = (NodeType.ENT, NodeType.GROUP, NodeType.REL, NodeType.COLL)

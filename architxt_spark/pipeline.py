@@ -126,11 +126,9 @@ def simplify(
 
     Returns ``(rewritten nodes, inferred SchemaPlan)``.
     """
-    from architxt_spark.operators import rewrite, simplify_names
+    from architxt_spark.operators import rewrite
 
-    out = simplify_names(
-        rewrite(nodes, tau=tau, epoch=epoch, min_support=min_support)
-    )
+    out = rewrite(nodes, tau=tau, epoch=epoch, min_support=min_support)
     return out, schema_from_forest(out)
 
 

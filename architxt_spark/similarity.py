@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from architxt_spark.model import NodeType
+from architxt_spark.session import tree_buckets
 from architxt_spark.trees import PyTree, rows_to_trees
 
 MAX_SIM_CTX_DEPTH = 5
@@ -199,17 +200,6 @@ def _collect_entities(node: PyTree) -> list[PyTree]:
     return acc
 
 
-
-def _tree_buckets(nodes: DataFrame):
-    """Bucketed per-tree grouping (see
-    :func:`architxt_spark.session.tree_buckets`): pinned-width exchange
-    (the AQE one-task coalescing trap) + many trees per pandas call (the
-    one-call-per-tree Arrow overhead trap)."""
-    from architxt_spark.session import tree_buckets
-
-    return tree_buckets(nodes)
-
-
 def candidate_subtrees(nodes: DataFrame, *, max_height: int = DEFAULT_MAX_HEIGHT) -> DataFrame:
     """(tree_id, node_id, node_name, signature) for candidate subtrees:
     height ≤ max_height, not ENT, ≥1 entity, no duplicate entity labels
@@ -240,7 +230,7 @@ def candidate_subtrees(nodes: DataFrame, *, max_height: int = DEFAULT_MAX_HEIGHT
             walk(tree, [])
         return pd.DataFrame(out, columns=["tree_id", "node_id", "node_name", "signature"])
 
-    return _tree_buckets(nodes).applyInPandas(
+    return tree_buckets(nodes).applyInPandas(
         extract, "tree_id string, node_id string, node_name string, signature string"
     )
 
@@ -305,7 +295,7 @@ def candidate_contexts(
             columns=["tree_id", "node_id", "node_name", "typed_label", "signature", "ctx"],
         )
 
-    return _tree_buckets(nodes).applyInPandas(
+    return tree_buckets(nodes).applyInPandas(
         extract,
         "tree_id string, node_id string, node_name string, typed_label string, "
         "signature string, ctx array<struct<label string, ents array<string>>>",

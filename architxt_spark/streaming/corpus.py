@@ -123,15 +123,12 @@ def minhash_dedup_batch(
     # micro-batch at sf0.1 against ~3 s for this shape; `_spread` inside
     # the pipeline re-partitions the (typically single-file,
     # single-partition) micro-batch so hashing parallelizes.
-    holds: list = []
     bands = (
-        _signature_frame(batch, text_col, id_col, holds)
+        _signature_frame(batch, text_col, id_col)
         .select("id", F.explode(minhash_bands(F.col("sig"))).alias("band"))
         .persist()
     )
     bands.count()  # eager: fold the gated-batch lineage into the cache once
-    for h in holds:  # then release the shingle scratch arrays
-        h.unpersist()
     try:
         hit_hist = None
         if bloom_bits is not None:

@@ -40,6 +40,31 @@ def test_load_sql_simplify_export_sql(spark, sf_dir):
     assert nation is not None and dict(nation.dtypes).get("n_nationkey") == "bigint"
 
 
+def test_simplify_returns_rewrite_forest(spark, sf_dir, count_jobs):
+    """``simplify`` hands on ``rewrite``'s forest unchanged: the rewrite
+    already ends in ``simplify_names``, so a second naming pass would
+    only add a driver collect and a join for every consumer."""
+    from architxt_spark.operators import rewrite
+
+    tables = {
+        "nation": spark.read.parquet(f"{sf_dir}/nation.parquet"),
+        "region": spark.read.parquet(f"{sf_dir}/region.parquet"),
+    }
+    nodes = pipeline.load_sql(
+        spark,
+        tables,
+        [FK("nation", "n_regionkey", "region", "r_regionkey")],
+        {"nation": ["n_nationkey"], "region": ["r_regionkey"]},
+    ).localCheckpoint()
+    box = {}
+    jobs = count_jobs(lambda: box.update(result=pipeline.simplify(nodes, epoch=2)))
+    out, schema = box["result"]
+    assert schema.groups
+    expected = rewrite(nodes, epoch=2)
+    assert sorted(map(str, out.collect())) == sorted(map(str, expected.collect()))
+    assert jobs == 37
+
+
 def test_load_graph_and_export_cypher(spark, sf_dir):
     nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
     reg = spark.read.parquet(f"{sf_dir}/region.parquet")

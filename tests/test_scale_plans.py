@@ -170,11 +170,15 @@ def test_dedup_filter_restricts_minhash_to_exact_reps(spark):
 
 
 def test_minhash_band_cap_is_anti_join_not_cartesian(spark):
-    from architxt_spark.functions.dedup import minhash_lsh_pairs
+    from architxt_spark.functions.dedup import _signature_frame, minhash_lsh_pairs
 
     rows = [(i, f"document number {i} content body here") for i in range(30)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = minhash_lsh_pairs(df, "text", "doc_id", max_band_df=100)
+    # with the caller's signature frame the pair frame stays lazy, so its
+    # plan is inspectable (signatures built inside are materialized behind
+    # a stage barrier and released)
+    sig = _signature_frame(df, "text", "doc_id")
+    out = minhash_lsh_pairs(df, "text", "doc_id", max_band_df=100, signatures=sig)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "LeftAnti" in plan  # heavy-band exclusion
@@ -205,3 +209,39 @@ def test_corpus_sink_cluster_by_uses_range_partitioning(spark, tmp_path):
     plan = placed._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" in plan.lower()
     assert "SinglePartition" not in plan
+
+
+def test_explode_over_shingle_chain_has_no_inferred_filter(spark):
+    """The shingle and winnow explodes carry no scratch cache; they rely on
+    the session profile excluding ``InferFiltersFromGenerate``.  With the
+    rule on, the optimized plan grows a ``Filter (size(...) > 0)`` that
+    evaluates the interpreted token/shingle chain a second time."""
+    from architxt_spark.functions.dedup import _shingle_rows, _winnow_rows
+
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"), (2, "")],
+        "doc_id long, text string",
+    )
+    for frame in (
+        _shingle_rows(df, "text", "doc_id"),
+        _winnow_rows(df, "text", "doc_id", 3, 4),
+    ):
+        plan = frame._jdf.queryExecution().optimizedPlan().toString()
+        assert "Generate explode" in plan, plan
+        filters = [ln for ln in plan.splitlines() if "Filter" in ln and "size(" in ln]
+        assert filters == [], plan
+
+
+def test_llm_rewrite_runs_at_session_width(spark):
+    """llm_rewrite's tree shuffle has a pinned width: a count-less
+    ``repartition`` is coalesced by AQE, and a small forest then reaches
+    the per-partition LLM pass in fewer tasks than cores."""
+    from architxt_spark.llm import llm_rewrite
+
+    nodes = _forest(spark, n_trees=200)
+    out = llm_rewrite(nodes)
+    assert len(out.collect()) == nodes.count()  # executes out's own plan
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]  # AQE prints both sections
+    assert "MapInPandas" in final, plan
+    assert "coalesced" not in final, plan

@@ -93,10 +93,9 @@ def main() -> None:
                 (F.col("doc_id") + 1_000_000_000).alias("doc_id"), "text"
             )
         )
-        holds: list = []
         t0 = time.perf_counter()
         seed_bands = (
-            _signature_frame(seeds, "text", "doc_id", holds)
+            _signature_frame(seeds, "text", "doc_id")
             .select("id", F.explode(minhash_bands(F.col("sig"))).alias("band"))
             .persist()
         )
@@ -108,8 +107,6 @@ def main() -> None:
                 seed_bands, "band", n_bits=args.bloom_bits
             ).write.mode("append").parquet(f"{index_path}_bloom")
         seed_bands.unpersist()
-        for h in holds:
-            h.unpersist()
         print(
             f"# seeded index with {args.seed_docs} docs' bands "
             f"in {time.perf_counter() - t0:.1f}s",
