@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from architxt_spark.functions import ann, dedup, sampling, search
 from architxt_spark.functions import text as T
+from architxt_spark.session import held, stage_barrier
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1064,8 +1065,6 @@ def pq_serving_codes(spark: SparkSession, sf: str):
     the corpus at INDEX time, so per-batch queries pay only the
     broadcast-LUT scoring pass (the same serving split as
     ``ivf_serving_index``; deterministic, values unchanged)."""
-    from architxt_spark.session import stage_barrier
-
     key = (spark.sparkContext.applicationId, sf)
     if key not in _PQ_CODES_CACHE:
         cb, codes = ann.pq_encode(_t(spark, sf, "embeddings"))
@@ -1888,9 +1887,9 @@ def q_multimodal_dedup(spark: SparkSession, sf: str) -> DataFrame:
         dedup._spread(_t(spark, sf, "documents").select("doc_id"))
         .mapInPandas(build, "media_id string, content binary")
     )
-    hashes = image_hashes(media).persist()
-    hashes.count()  # eager: the hash variant and both band-join sides
-    # would otherwise each re-run the Python decode chain
+    # landed: the hash variant and both band-join sides would otherwise
+    # each re-run the Python decode chain
+    hashes = stage_barrier(image_hashes(media))
     hash_rows = hashes.select(
         F.lit("hash").alias("variant"),
         F.col("media_id").alias("s"),
@@ -1930,8 +1929,7 @@ def q_multimodal_dedup(spark: SparkSession, sf: str) -> DataFrame:
         dedup._spread(_t(spark, sf, "documents").select("doc_id"))
         .mapInPandas(build_audio, "media_id string, content binary")
     )
-    fps = audio_fingerprints(clips).persist()
-    fps.count()  # eager: the fp variant and both band-join sides
+    fps = stage_barrier(audio_fingerprints(clips))  # the fp variant and both band-join sides
     afp_rows = fps.select(
         F.lit("afp").alias("variant"),
         F.col("media_id").alias("s"),
@@ -2036,8 +2034,7 @@ def q_crawl_media_dedup(spark: SparkSession, sf: str) -> DataFrame:
         F.regexp_extract("target_uri", r"^img:(\d+)$", 1).alias("media_id"),
         F.col("payload").alias("content"),
     )
-    hashes = image_hashes(media).persist()
-    hashes.count()  # eager: the hash variant and both band-join sides
+    hashes = stage_barrier(image_hashes(media))  # the hash variant and both band-join sides
     hash_rows = hashes.select(
         F.lit("hash").alias("variant"),
         F.col("media_id").alias("s"),
@@ -2507,7 +2504,6 @@ def dsir_model(spark: SparkSession, sf: str) -> DataFrame:
     artifact (Xie et al. estimate the ratio model per corpus snapshot,
     then score every batch); bucket-bounded, barriered once."""
     from architxt_spark.functions import dsir
-    from architxt_spark.session import stage_barrier
 
     key = (spark.sparkContext.applicationId, sf)
     if key not in _DSIR_MODEL_CACHE:
@@ -2528,7 +2524,6 @@ def q_dsir(spark: SparkSession, sf: str) -> DataFrame:
     model is the once-per-session artifact (``dsir_model``); each call
     pays the scoring pass."""
     from architxt_spark.functions import dsir
-    from architxt_spark.session import stage_barrier
 
     docs = _t(spark, sf, "documents").select("doc_id", "text")
     target = docs.filter(F.col("doc_id") < 25)
@@ -3063,12 +3058,11 @@ def q_crawl_to_corpus(spark: SparkSession, sf: str) -> DataFrame:
             F.regexp_extract("target_uri", r"\|([^|]*)$", 1).alias("source"),
             F.length("text").alias("n_chars"),
         )
-        .persist()
+        .transform(stage_barrier)
     )
-    docs.count()  # eager: the crawl census, decontam bench, curation
-    # stages, and the sink all read this frame — without the barrier each
-    # consumer re-runs the Python WARC parse chain (the chained-frame
-    # persist rule; at real scale this materialization is the natural
+    # landed: the crawl census, decontam bench, curation stages, and the
+    # sink all read this frame — without the barrier each consumer re-runs
+    # the Python WARC parse chain (at real scale this is the natural
     # land-the-crawl checkpoint)
     bench = docs.filter(F.col("doc_id") % 23 == 5).select("doc_id", "text")
     kept, census = curate_corpus(
@@ -3238,7 +3232,6 @@ def q_link_pagerank(spark: SparkSession, sf: str) -> DataFrame:
         "event_id",
         F.get_json_object("props", "$.k").cast("long").alias("page"),
     )
-    from architxt_spark.session import stage_barrier
 
     # one materialization feeds BOTH variants' iteration chains — the
     # session window pass runs once, not per variant
@@ -3711,7 +3704,7 @@ def q_dedup_pairs(spark: SparkSession, sf: str) -> DataFrame:
     index) in one tagged pair frame.
 
     The jaccard and minhash generators key off the SAME distinct
-    word-3-gram md5s (15-hex vs 7-hex prefixes), so one shared persisted
+    word-3-gram md5s (15-hex vs 7-hex prefixes), so one shared held
     ``(id, md5)`` frame feeds both — the corpus is tokenized, shingled
     and hashed ONCE per fold instead of once per generator (r15,
     ``dedup.shingle_md5_rows``).  The winnow screen keeps its own base
@@ -3719,8 +3712,9 @@ def q_dedup_pairs(spark: SparkSession, sf: str) -> DataFrame:
     identical: each generator applies the same substring/conv it always
     derived from the same md5."""
     docs = _t(spark, sf, "documents")
-    shared, _n = dedup.shingle_md5_rows(docs, "text", "doc_id")
-    try:
+    # both consumers land their pair frames behind a stage barrier, so the
+    # shared md5 rows can be released when the block closes
+    with held(dedup.shingle_md5_rows(docs, "text", "doc_id")) as shared:
         jac = dedup.ngram_jaccard_pairs(
             docs, "text", "doc_id", threshold=0.2, md5_rows=shared
         ).select(
@@ -3728,12 +3722,6 @@ def q_dedup_pairs(spark: SparkSession, sf: str) -> DataFrame:
             "id_a",
             "id_b",
             F.col("jaccard").alias("score"),
-        )
-        win = dedup.winnow_pairs(docs, "text", "doc_id").select(
-            F.lit("winnow").alias("variant"),
-            "id_a",
-            "id_b",
-            F.col("n_common").cast("double").alias("score"),
         )
         m = dedup.minhash_lsh_pairs(
             docs, "text", "doc_id", max_band_df=1000, md5_rows=shared
@@ -3743,11 +3731,12 @@ def q_dedup_pairs(spark: SparkSession, sf: str) -> DataFrame:
             "id_b",
             F.col("est_jaccard").alias("score"),
         )
-    finally:
-        # both consumers are materialized by now (the jaccard pair frame
-        # is stage-barriered inside its builder; the minhash signature
-        # frame is eagerly persisted) — the shared md5 cache can go
-        shared.unpersist()
+    win = dedup.winnow_pairs(docs, "text", "doc_id").select(
+        F.lit("winnow").alias("variant"),
+        "id_a",
+        "id_b",
+        F.col("n_common").cast("double").alias("score"),
+    )
     return jac.unionByName(win).unionByName(m)
 
 
@@ -3770,78 +3759,61 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # entry folded/renamed or code-touched this round, go FIRST so any
     # prefix the gate takes maximizes newly-verified coverage.
     first = [
-        # Entries whose EXECUTED CODE changed in round 15 (optimization
-        # round 2) and that are not already in the r13-stale block below —
-        # the gate prefix reaches these first so the changed code gets a
-        # driver verdict the same round:
-        # quality_classifier: classifier_score single-scan explode_outer
-        #   + labelled single-scan training (classifier.py);
-        # lm_perplexity / ppl_buckets: short-doc rows fused into the
-        #   scoring explode (lm.py);
-        # dsir: one-scan scoring with the left-join replay (dsir.py);
-        # contamination_screen: signatures ride the cross-pair band rows
-        #   (dedup.py minhash_cross_pairs);
-        # graph_extract: BFS level barrier + emptiness probe fused to one
-        #   job (sources/graph.py);
-        # link_pagerank: lazily-chained iterations with interval barriers
-        #   (linkgraph.py);
-        # dedup_pairs / dedup_filtered / stream_minhash_dedup /
-        # stream_curate: memo-key + signature-lifecycle changes in their
-        #   executed path (text.py/_memo_expr, dedup.py, curation.py).
-        "quality_classifier",
-        "lm_perplexity",
-        "ppl_buckets",
-        "dsir",
-        "contamination_screen",
-        "graph_extract",
-        "link_pagerank",
+        # Entries whose executed code changed this round: every cached
+        # frame got one owner (stage_barrier or session.held) across the
+        # dedup, curation, classifier, graph, clustering, media and
+        # streaming paths, and read_warc_split resyncs after a phantom
+        # record embedded in an outer payload.
         "dedup_pairs",
         "dedup_filtered",
-        "stream_minhash_dedup",
-        "stream_curate",
-        # Entries whose newest driver verdict is round 13 — the ≤2-round
-        # rotation contract requires the r15 gate to renew all 36.  This
-        # block also covers the r14-opt rewrites that shipped without an
-        # r14 verdict (VERDICT r14 #1: curation_pipeline, crawl_to_corpus,
-        # c4_clean, text_profile, pii_redaction, lang_distribution,
-        # doc_quality_stats) and the r15 curation fusion (curation_pipeline,
-        # crawl_to_corpus inherit curation.py + classifier.py changes).
+        "dedup_exact_spans",
+        "dedup_components",
+        "contamination_screen",
         "curation_pipeline",
         "crawl_to_corpus",
-        "c4_clean",
-        "text_profile",
-        "pii_redaction",
-        "lang_distribution",
-        "doc_quality_stats",
-        "bm25_batch",
-        "bpe_suite",
-        "chunk_pipeline",
-        "corpus_delta",
+        "quality_classifier",
+        "graph_extract",
+        "cluster_documents",
+        "cluster_instance_documents",
+        "multimodal_dedup",
         "crawl_media_dedup",
-        "dataset_extract_nation",
-        "dedup_components",
-        "doc_chunking",
-        "embedding_near_dup",
-        "events_funnel",
-        "events_rollup_streaming",
-        "events_sessionize_streaming",
-        "export_stats",
-        "extract_vocab",
-        "forest_stats_documents",
-        "gen_instance",
-        "join_salted_revenue",
-        "llm_rewrite_stub",
-        "nlp_parse_forest",
-        "sampling_mixture",
-        "sampling_strata",
-        "scalar_funcs",
-        "schema_groups_nation",
-        "simple_rewrite_documents",
-        "sketch_suite",
-        "temporal_joins",
-        "unicode_split",
-        "unpivot_orders",
-        "window_grouping",
+        "stream_minhash_dedup",
+        "stream_curate",
+        "warc_split_roundtrip",
+        # The rest of the entries whose newest driver verdict is round 14
+        # (PERF_r15 queries_dropped) — the ≤2-round rotation contract
+        # requires this gate to renew all 36.
+        "ann_recall",
+        "ann_suite",
+        "bm25_topk",
+        "collocations",
+        "corpus_health",
+        "coverage_metric",
+        "dedup_simhash",
+        "distinct_parts_per_brand",
+        "doc_loader_files",
+        "doc_loader_json_props",
+        "domain_profile",
+        "events_sessionize",
+        "extract_valid_trees",
+        "join_filtered_customers",
+        "llm_label_schema",
+        "metrics_customer",
+        "multimodal_profile",
+        "ngram_stats",
+        "percentile_orders",
+        "random_project",
+        "rewrite_documents",
+        "sampling_pack",
+        "sampling_temperature",
+        "sampling_weighted",
+        "semantic_dedup",
+        "setop_nations_cust_minus_supp",
+        "sort_limit_top_orders",
+        "stream_url_seen",
+        "tfidf_terms",
+        "tree_leaves_nation",
+        "typed_export_orders",
     ]
     return {**{k: q[k] for k in first}, **{k: v for k, v in q.items() if k not in first}}
 

@@ -39,7 +39,7 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from architxt_spark.session import get_spark
+from architxt_spark.session import get_spark, held
 
 
 def _write_nodes(nodes: DataFrame, out: str) -> None:
@@ -287,11 +287,11 @@ def _cmd_drift(args: argparse.Namespace) -> None:
         spark.read.parquet(args.corpus_b),
         text_col=args.text_col,
         min_count=args.min_count,
-    ).cache()
-    from pyspark.sql import functions as F
-
-    total = drift.agg(F.sum("jeffreys")).first()[0]
-    for r in drift.orderBy(F.desc("jeffreys")).limit(args.top).collect():
+    )
+    with held(drift):
+        total = drift.agg(F.sum("jeffreys")).first()[0]
+        top = drift.orderBy(F.desc("jeffreys")).limit(args.top).collect()
+    for r in top:
         print(f"{r.token}\t{r.c_a}\t{r.c_b}\t{r.jeffreys:.6g}")
     print(f"TOTAL\t\t\t{total:.6g}")
 

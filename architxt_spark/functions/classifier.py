@@ -32,12 +32,15 @@ dedup/sampling/DSIR.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from architxt_spark.functions import text as T
 from architxt_spark.functions.dedup import _spread
 from architxt_spark.functions.dsir import _feature_bucket
+from architxt_spark.session import held
 
 #: default feature-hash bucket count (fastText uses 2M for word n-grams;
 #: 1024 keeps the broadcast/collect table tiny at test scale)
@@ -132,25 +135,24 @@ def train_quality_classifier(
     if (neg is None) == (label_col is None):
         raise ValueError("pass either neg or label_col, not both")
     spark = pos.sparkSession
-    feats = _labelled_features(
-        pos, neg, id_col, text_col, n_buckets, bigrams, label_col=label_col
-    ).persist()
-    held: list[DataFrame] = []
-    try:
+    with ExitStack() as scope:
+        feats = scope.enter_context(held(_labelled_features(
+            pos, neg, id_col, text_col, n_buckets, bigrams, label_col=label_col
+        )))
         # The iterations chain LAZILY as broadcast-joined weight frames —
         # the DuckDB twin's unrolled-CTE shape — so the whole training
         # loop is ONE action (the final bounded collect), not a blocking
-        # driver round-trip per iteration.  Each w_k is persisted: it is
+        # driver round-trip per iteration.  Each w_k is held: it is
         # referenced twice per following iteration (broadcast into the
         # margin join AND as the update's left side), and without the
         # (n_buckets-bounded) cache those subplans recompute
         # combinatorially.  Same integer ops in the same order, so
         # margins stay bit-identical to the per-iteration collect this
-        # replaces (and to the SQL twin).
-        w = feats.select("b").distinct().select(
-            "b", F.lit(0).cast("long").alias("w")
-        ).persist()
-        held.append(w)
+        # replaces (and to the SQL twin).  The scope releases every held
+        # frame even when planning or the final collect raises.
+        w = scope.enter_context(held(
+            feats.select("b").distinct().select("b", F.lit(0).cast("long").alias("w"))
+        ))
         for _ in range(iterations):
             margins = (
                 feats.join(F.broadcast(w), "b")
@@ -167,22 +169,12 @@ def train_quality_classifier(
                 .groupBy("b")
                 .agg(F.sum(F.col("y") * F.col("x")).alias("g"))
             )
-            w = (
+            w = scope.enter_context(held(
                 w.join(grad, "b", "left")
                 .select("b", (F.col("w") + F.coalesce(F.col("g"), F.lit(0))).alias("w"))
-            ).persist()
-            held.append(w)
+            ))
         rows = w.collect()  # bounded by n_buckets; runs all iterations
-        return spark.createDataFrame(
-            sorted((r["b"], r["w"]) for r in rows), "b long, w long"
-        )
-    finally:
-        # Release EVERY persisted frame even when planning or the final
-        # collect raises — otherwise iterations+1 cached weight frames
-        # leak per failed training call.
-        for h in held:
-            h.unpersist()
-        feats.unpersist()
+    return spark.createDataFrame(sorted((r["b"], r["w"]) for r in rows), "b long, w long")
 
 
 def classifier_score(

@@ -263,13 +263,6 @@ def curate_corpus(
         census = census.unionByName(stage("domain", domain_frame))
     census = census.unionByName(stage("dedup", kept))
 
-    if decontaminate_against is None:
-        # the signature frame dedup_filter persisted has no further
-        # consumer — release it now that the (eager) survivor barrier is
-        # materialized, so repeated pipeline runs in one session don't
-        # accumulate cached (id, sig) frames in executor storage
-        sig_out[0].unpersist()
-
     if decontaminate_against is not None:
         # eval-set decontamination over the DEDUPED survivors (the
         # benchmark band index broadcasts; corpus scanned once).  Only
@@ -295,9 +288,6 @@ def curate_corpus(
             )
         )
         kept = kept.join(drop_ids, id_col, "left_anti")
-        # the drop-id barrier (eager) was the signature frame's last
-        # consumer — release the persist dedup_filter left behind
-        sig_out[0].unpersist()
         census = census.unionByName(stage("decontam", kept))
 
     if ppl_drop_tail:

@@ -24,12 +24,14 @@ render the same definition for DuckDB.
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from architxt_spark.functions import text as T
-from architxt_spark.session import stage_barrier
+from architxt_spark.session import held, stage_barrier
 
 MINHASH_K = 16
 MINHASH_BAND_SIZE = 4
@@ -72,7 +74,7 @@ _PAIR_ROWS_PER_PARTITION = 4_000_000
 def _pair_shuffle_width(spark, n_index_rows: int) -> int:
     """Shuffle width for an inverted-index self-join, derived from the
     MEASURED index row count (the pair generators already force an eager
-    count when they persist the index — the estimate is free).  Returns
+    count when they hold the index — the estimate is free).  Returns
     0 when the session default parallelism suffices, so small inputs
     keep their existing plans with no extra exchange; larger indexes get
     a power-of-two width sized to ``_PAIR_ROWS_PER_PARTITION`` — the
@@ -184,22 +186,18 @@ def minhash_bands(sig: Column, k: int = MINHASH_K, band_size: int = MINHASH_BAND
     ])
 
 
-def shingle_md5_rows(
-    df: DataFrame, text_col: str, id_col: str
-) -> tuple[DataFrame, int]:
-    """``(id, m)`` — one PERSISTED row per distinct word-3-gram shingle
-    per document, ``m`` = the full 32-hex md5 of the shingle, plus the
-    eager row count.  The shared front half of the md5-keyed pair
-    generators (r15): :func:`ngram_jaccard_pairs` keys its inverted
-    index on ``conv(substr(m,1,15))`` and :func:`minhash_lsh_pairs`
-    derives its 28-bit permutation inputs from ``conv(substr(m,1,7))``,
-    so a caller running BOTH (the registry's dedup_pairs fold) hands
-    this frame to each and the corpus is tokenized, shingled, exploded
-    and md5-hashed ONCE instead of once per generator.  Caller owns the
-    persist: unpersist after the consuming frames are materialized."""
-    rows = _shingle_rows(df, text_col, id_col).select("id", F.md5(F.col("s")).alias("m")).persist()
-    n = rows.count()  # eager: hash once; every consumer reads the cache
-    return rows, n
+def shingle_md5_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """``(id, m)`` — one row per distinct word-3-gram shingle per
+    document, ``m`` = the full 32-hex md5 of the shingle.  The shared
+    front half of the md5-keyed pair generators (r15):
+    :func:`ngram_jaccard_pairs` keys its inverted index on
+    ``conv(substr(m,1,15))`` and :func:`minhash_lsh_pairs` derives its
+    28-bit permutation inputs from ``conv(substr(m,1,7))``, so a caller
+    running BOTH (the registry's dedup_pairs fold) scopes this frame
+    with ``session.held`` and hands it to each: the corpus is tokenized,
+    shingled, exploded and md5-hashed ONCE instead of once per
+    generator."""
+    return _shingle_rows(df, text_col, id_col).select("id", F.md5(F.col("s")).alias("m"))
 
 
 def minhash_lsh_pairs(
@@ -220,7 +218,7 @@ def minhash_lsh_pairs(
     decontamination stage) pass it here so the corpus is scanned and
     shingle-hashed ONCE per pipeline, not once per consumer; the pair
     frame then stays lazy over it.  Without ``signatures`` the frame built
-    here is persisted for the band self-join and released before return,
+    here is ``held`` for the band self-join and released before return,
     so the (small) pair frame comes back materialized behind a
     :func:`stage_barrier`.
 
@@ -241,74 +239,70 @@ def minhash_lsh_pairs(
     (:func:`dedup_filter`) additionally restrict the input to
     exact-duplicate representatives first, which removes the dominant
     hot-band source without changing the keep-set at all."""
-    owned = None
     if signatures is not None:
-        base = signatures
-    else:
-        if md5_rows is not None:
-            # shared md5 front half (see shingle_md5_rows): derive the
-            # 28-bit permutation inputs from the cached rows instead of
-            # re-tokenizing the corpus
-            h = F.conv(F.substring(F.col("m"), 1, 7), 16, 10).cast("long")
-            base = (
-                md5_rows.select("id", h.alias("h"))
-                .groupBy("id")
-                .agg(*_minhash_min_aggs())
-                .select(
-                    "id",
-                    F.array(*[F.col(f"m{i}") for i in range(MINHASH_K)]).alias("sig"),
-                )
+        return _band_pairs(signatures, max_band_df)  # stays lazy over the caller's frame
+    if md5_rows is not None:
+        # shared md5 front half (see shingle_md5_rows): derive the 28-bit
+        # permutation inputs from the caller's rows instead of
+        # re-tokenizing the corpus
+        h = F.conv(F.substring(F.col("m"), 1, 7), 16, 10).cast("long")
+        base = (
+            md5_rows.select("id", h.alias("h"))
+            .groupBy("id")
+            .agg(*_minhash_min_aggs())
+            .select(
+                "id",
+                F.array(*[F.col(f"m{i}") for i in range(MINHASH_K)]).alias("sig"),
             )
-        else:
-            base = _signature_frame(df, text_col, id_col)
-        base = owned = base.persist()
+        )
+    else:
+        base = _signature_frame(df, text_col, id_col)
+    with held(base):
         base.count()  # eager: both self-join branches would otherwise race
         # to materialize the cache and compute the signature pipeline twice
-    try:
-        # NOTE (r15, measured and REJECTED): carrying ``sig`` through the band
-        # self-join to delete the est-rejoin below was A/B'd in two variants —
-        # est-per-banded-occurrence (2× slower at sf0.1: the interpreted
-        # zip_with ran up to bands× per pair, pre-distinct) and
-        # groupBy+first(sig) (flat at sf0.1; 1M-doc Zipf rung 24.6 s vs
-        # 22.0 s at matched calib; 4M rung 70.7 vs 73.1 s raw on a
-        # slower-probe before-host — no win).  The carried shape also
-        # shuffles ~4× the pair bytes at scale (two 16-long signatures per
-        # candidate row vs two longs), against guide §8's decide-with-small-
-        # rows rule — the rejoin keeps the 64M-pair shuffle at 16 bytes/row
-        # and attaches signatures to the (far smaller) distinct pair set.
-        banded = base.select("id", F.explode(minhash_bands(F.col("sig"))).alias("band"))
-        if max_band_df is not None:
-            heavy = (
-                banded.groupBy("band").count().filter(F.col("count") > max_band_df).select("band")
-            )
-            banded = banded.join(F.broadcast(heavy), "band", "left_anti")
-        a = banded.alias("a")
-        b = banded.alias("b")
-        pairs = (
-            a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.id") < F.col("b.id")))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct()
+        # materialize the SMALL pair frame before the signatures are released
+        return _band_pairs(base, max_band_df).transform(stage_barrier)
+
+
+def _band_pairs(base: DataFrame, max_band_df: int | None) -> DataFrame:
+    """``(id_a, id_b, est_jaccard)`` over an ``(id, sig)`` frame — the band
+    self-join and estimate of :func:`minhash_lsh_pairs`.
+
+    NOTE (r15, measured and REJECTED): carrying ``sig`` through the band
+    self-join to delete the est-rejoin below was A/B'd in two variants —
+    est-per-banded-occurrence (2× slower at sf0.1: the interpreted
+    zip_with ran up to bands× per pair, pre-distinct) and
+    groupBy+first(sig) (flat at sf0.1; 1M-doc Zipf rung 24.6 s vs 22.0 s
+    at matched calib; 4M rung 70.7 vs 73.1 s raw on a slower-probe
+    before-host — no win).  The carried shape also shuffles ~4× the pair
+    bytes at scale (two 16-long signatures per candidate row vs two
+    longs), against guide §8's decide-with-small-rows rule — the rejoin
+    keeps the 64M-pair shuffle at 16 bytes/row and attaches signatures
+    to the (far smaller) distinct pair set."""
+    banded = base.select("id", F.explode(minhash_bands(F.col("sig"))).alias("band"))
+    if max_band_df is not None:
+        heavy = banded.groupBy("band").count().filter(F.col("count") > max_band_df).select("band")
+        banded = banded.join(F.broadcast(heavy), "band", "left_anti")
+    a = banded.alias("a")
+    b = banded.alias("b")
+    pairs = (
+        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.id") < F.col("b.id")))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .distinct()
+    )
+    sa = base.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
+    sb = base.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
+    est = F.size(
+        F.filter(
+            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
+            lambda e: e,
         )
-        sa = base.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-        sb = base.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-        est = F.size(
-            F.filter(
-                F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-                lambda e: e,
-            )
-        ) / F.size(F.col("sig_a"))
-        out = (
-            pairs.join(sa, "id_a")
-            .join(sb, "id_b")
-            .select("id_a", "id_b", F.round(est, 4).alias("est_jaccard"))
-        )
-        if owned is None:
-            return out  # the caller's signature frame: the caller releases it
-        # materialize the SMALL pair frame, then release the signatures built here
-        return out.transform(stage_barrier)
-    finally:
-        if owned is not None:
-            owned.unpersist()
+    ) / F.size(F.col("sig_a"))
+    return (
+        pairs.join(sa, "id_a")
+        .join(sb, "id_b")
+        .select("id_a", "id_b", F.round(est, 4).alias("est_jaccard"))
+    )
 
 
 def _signature_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -364,15 +358,15 @@ def minhash_cross_pairs(
     signatures, and passing them here removes this operator's own
     corpus scan + shingle-hash pass (signatures depend only on the
     text, so the values are identical by construction)."""
+    # landed: the band explode reads each side, and the pair frame
+    # returned here stays lazy over both
     if corpus_signatures is not None:
         ca = corpus_signatures
     else:
-        ca = _signature_frame(corpus, text_col, id_col).persist()
-        ca.count()  # eager: banding + the est rejoin both read it
-    cb = _signature_frame(
-        benchmark, bench_text_col or text_col, bench_id_col or id_col
-    ).persist()
-    cb.count()
+        ca = stage_barrier(_signature_frame(corpus, text_col, id_col))
+    cb = stage_barrier(
+        _signature_frame(benchmark, bench_text_col or text_col, bench_id_col or id_col)
+    )
     # signatures ride the band rows (see minhash_lsh_pairs, r15): the
     # corpus side is scanned ONCE and the former est-rejoin — which
     # re-shuffled the corpus signature frame onto the pair set — is gone;
@@ -654,22 +648,19 @@ def ngram_jaccard_pairs(
     # no size guard: explode drops empty arrays, and a size() filter
     # gets predicate-pushed through the projection barrier, inlining the
     # whole shingle chain into the filter (per-element re-evaluation).
-    # persist the exploded index: the heavy-set aggregation and both
-    # self-join sides read it.
     if md5_rows is not None:
         # shared md5 front half (see shingle_md5_rows): the fingerprint
-        # is a cheap substring+conv over the caller's cached rows — the
-        # caller owns that persist, so no second cache is taken here
+        # is a cheap substring+conv over the caller's held rows, so no
+        # second cache is taken here
         fp15 = F.conv(F.substring(F.col("m"), 1, 15), 16, 10).cast("long")
-        raw = md5_rows.select("id", fp15.alias("s"))
-        n_index = md5_rows.count()  # cached — the free size estimate
-        owned = None
+        index = nullcontext(md5_rows.select("id", fp15.alias("s")))
     else:
+        # hold the exploded index: the heavy-set aggregation and both
+        # self-join sides read it
         fp = F.conv(F.substring(F.md5(F.col("s")), 1, 15), 16, 10).cast("long")
-        raw = _shingle_rows(df, text_col, id_col).select("id", fp.alias("s")).persist()
+        index = held(_shingle_rows(df, text_col, id_col).select("id", fp.alias("s")))
+    with index as raw:
         n_index = raw.count()  # eager for the same both-branches-race reason as minhash
-        owned = raw
-    try:
         heavy = raw.groupBy("s").count().filter(F.col("count") > max_shingle_df).select("s")
         inv = raw.join(F.broadcast(heavy), "s", "left_anti")
         # auto-sized self-join width (r11 #5): past ~128M index rows the
@@ -702,11 +693,8 @@ def ngram_jaccard_pairs(
             .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
             .filter(F.col("jaccard") >= threshold)
         )
-        # materialize the SMALL pair frame, then release the cached index
+        # materialize the SMALL pair frame, then release the held index
         return out.transform(stage_barrier)
-    finally:
-        if owned is not None:
-            owned.unpersist()
 
 
 def ngram_jaccard_pairs_sql(
@@ -877,7 +865,7 @@ def dedup_filter(
     near-identical-but-not-exact bucket the same way (exact over the
     capped band universe; mirrored in the SQL twin).
 
-    ``signatures_out`` (optional): pass a list to receive the persisted
+    ``signatures_out`` (optional): pass a list to receive the landed
     ``(id, sig)`` minhash-signature frame of the representatives.  A
     curation pipeline's decontamination stage needs signatures for a
     SUBSET of these ids (the dedup survivors) — reusing this frame
@@ -887,14 +875,14 @@ def dedup_filter(
     fp = _spread(df).select(
         F.col(id_col).alias("id"), T.fingerprint(F.col(text_col)).alias("fp")
     )
-    keep_exact = fp.groupBy("fp").agg(F.min("id").alias("id")).select("id").persist()
-    keep_exact.count()  # eager: reps semi-join + final anti-join both read it
+    # landed: the reps semi-join and the returned anti-join both read it
+    keep_exact = stage_barrier(fp.groupBy("fp").agg(F.min("id").alias("id")).select("id"))
     reps = df.join(
         keep_exact.select(F.col("id").alias(id_col)), id_col, "left_semi"
     )
-    sig = _signature_frame(reps, text_col, id_col).persist()
-    sig.count()  # eager: band explode + est rejoin (+ any signatures_out
-    # consumer) all read it — same both-branches-race rule as before
+    # landed: band explode + est rejoin (+ any signatures_out consumer)
+    # all read it — same both-branches-race rule as minhash_lsh_pairs
+    sig = stage_barrier(_signature_frame(reps, text_col, id_col))
     if signatures_out is not None:
         signatures_out.append(sig)
     near = minhash_lsh_pairs(
@@ -1203,11 +1191,10 @@ def winnow_pairs(
     The fingerprint arrays explode straight into the index with no
     scratch cache: the session profile keeps the explode from
     re-evaluating the winnow chain (see `_winnow_rows`).  The exploded
-    index is persisted: the heavy-set aggregate and both self-join sides
-    read it."""
-    raw = _winnow_rows(df, text_col, id_col, n, w).persist()
-    n_index = raw.count()  # eager: hash once; heavy-set agg + self-join read the cache
-    try:
+    index is held: the heavy-set aggregate and both self-join sides read
+    it."""
+    with held(_winnow_rows(df, text_col, id_col, n, w)) as raw:
+        n_index = raw.count()  # eager: hash once; heavy-set agg + self-join read the cache
         heavy = raw.groupBy("f").count().filter(F.col("count") > max_fp_df).select("f")
         inv = raw.join(F.broadcast(heavy), "f", "left_anti")
         # auto-sized self-join width — same rationale as ngram_jaccard_pairs
@@ -1222,10 +1209,8 @@ def winnow_pairs(
             .filter(F.col("n_common") >= min_common)
         )
         # materialize the SMALL pair frame so the big exploded index can be
-        # released now instead of leaking cached blocks for the session
+        # released when the block closes
         return out.transform(stage_barrier)
-    finally:
-        raw.unpersist()
 
 
 def winnow_pairs_sql(
@@ -1293,21 +1278,20 @@ def exact_span_pairs(
     # ~2·10⁻¹⁸ per position pair — replays identically on both engines
     # and parity is unconditional).
     fpc = F.conv(F.substring(F.col("h0"), 1, 15), 16, 10).cast("long")
-    raw = (
+    positioned = (
         _spread(df)
         .select(F.col(id_col).alias("id"), T.tokens(F.col(text_col)).alias("__t"))
         .select("id", T.shingles_of_tokens(F.col("__t"), n).alias("__sh"))
         .select("id", F.transform("__sh", lambda s: F.md5(s)).alias("__h"))
         .select("id", F.posexplode("__h").alias("pos", "h0"))
         .select("id", "pos", fpc.alias("h"))
-        .persist()
     )
-    # eager: the positioned index feeds the heavy-set aggregate AND both
-    # self-join sides — persisting evaluates the interpreted hash chain
-    # ONCE instead of three times, and the count is the free size
-    # estimate the width rule needs (same shape as ngram/winnow, r12)
-    n_index = raw.count()
-    try:
+    with held(positioned) as raw:
+        # eager: the positioned index feeds the heavy-set aggregate AND both
+        # self-join sides — holding it evaluates the interpreted hash chain
+        # ONCE instead of three times, and the count is the free size
+        # estimate the width rule needs (same shape as ngram/winnow, r12)
+        n_index = raw.count()
         heavy = (
             raw.groupBy("h").count().filter(F.col("count") > max_shingle_df).select("h")
         )
@@ -1337,10 +1321,8 @@ def exact_span_pairs(
             .agg(F.max("span").alias("max_span"))
             .filter(F.col("max_span") >= min_tokens)
         )
-        # materialize the SMALL pair frame, then release the cached index
+        # materialize the SMALL pair frame, then release the held index
         return out.transform(stage_barrier)
-    finally:
-        raw.unpersist()
 
 
 def exact_span_pairs_sql(

@@ -8,11 +8,25 @@ memory, no UI) and :func:`cluster_conf` adds the cluster posture.  On a
 real cluster the same confs apply unchanged (AQE re-plans shuffles at
 runtime, handles skew joins, and coalesces small partitions — the knobs
 that matter at 100 TB).
+
+Every cached frame has one owner, and both owners live here:
+
+- a frame that LEAVES the function that built it lands through
+  :func:`stage_barrier` — an eager checkpoint outside the cache
+  manager, freed when it becomes unreachable, so no caller has a
+  release duty;
+- a SCRATCH frame, used and dropped inside one function, is scoped by
+  ``with held(df)`` — persisted on entry, unpersisted on exit even when
+  the body raises.
+
+No other module of the engine calls ``persist``, ``cache`` or
+``unpersist``.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -143,6 +157,20 @@ def stage_barrier(df, *, eager: bool = True):
     if durable:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+@contextmanager
+def held(df):
+    """Scope a scratch frame: ``df.persist()`` on entry, ``unpersist`` on
+    exit — also when the body raises.  The persist is lazy; a body that
+    needs the frame materialized before several consumers read it calls
+    ``count()`` itself.  A frame that outlives the block must come out
+    through :func:`stage_barrier` inside it."""
+    cached = df.persist()
+    try:
+        yield cached
+    finally:
+        cached.unpersist()
 
 
 def cluster_conf(

@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from architxt_spark.model import NodeType
-from architxt_spark.session import tree_buckets
+from architxt_spark.session import held, stage_barrier, tree_buckets
 from architxt_spark.trees import PyTree, rows_to_trees
 
 MAX_SIM_CTX_DEPTH = 5
@@ -828,38 +828,32 @@ def cluster_forest_with_index(
     """
     spark = nodes.sparkSession
     cands = candidate_subtrees(nodes, max_height=max_height)
-    cands.cache()
-
-    # Aggregate to (signature, node_name, count) BEFORE collecting: the
-    # driver then sees rows bounded by |signature vocab| × |name vocab|,
-    # never O(#subtrees) — a collect_list of member names would ship every
-    # candidate's name for hot signatures and OOM at scale.
-    sig_stats = cands.groupBy("signature", "node_name").agg(
-        F.count("*").alias("name_count")
-    )
-    rows = sig_stats.collect()
-    empty = spark.createDataFrame([], "node_id string, cluster_name string, support long")
-    if not rows:
-        return empty, {}
-    sigs = sorted({r["signature"] for r in rows})
-    comp, cluster_name, comp_support = _names_from_sig_stats(rows, tau, metric)
-
-    mapping = spark.createDataFrame(
-        [(s, cluster_name[comp[s]], comp_support[comp[s]]) for s in sigs],
-        "signature string, cluster_name string, support long",
-    )
-    # materialize the assignments BEFORE releasing the cached candidate
-    # frame: a bare unpersist would re-run the extraction pass per
-    # consumer, while skipping it would leak one pinned cache per call
-    # (the r9 classifier lesson — long-lived sessions accumulate them)
-    from architxt_spark.session import stage_barrier
-
-    out = stage_barrier(
-        cands.join(F.broadcast(mapping), "signature").select(
-            "node_id", "cluster_name", "support"
+    with held(cands):
+        # Aggregate to (signature, node_name, count) BEFORE collecting: the
+        # driver then sees rows bounded by |signature vocab| × |name vocab|,
+        # never O(#subtrees) — a collect_list of member names would ship
+        # every candidate's name for hot signatures and OOM at scale.
+        sig_stats = cands.groupBy("signature", "node_name").agg(
+            F.count("*").alias("name_count")
         )
-    )
-    cands.unpersist()
+        rows = sig_stats.collect()
+        if not rows:
+            empty = spark.createDataFrame([], "node_id string, cluster_name string, support long")
+            return empty, {}
+        sigs = sorted({r["signature"] for r in rows})
+        comp, cluster_name, comp_support = _names_from_sig_stats(rows, tau, metric)
+
+        mapping = spark.createDataFrame(
+            [(s, cluster_name[comp[s]], comp_support[comp[s]]) for s in sigs],
+            "signature string, cluster_name string, support long",
+        )
+        # land the assignments BEFORE the held candidate frame is released:
+        # a lazy result would re-run the extraction pass per consumer
+        out = stage_barrier(
+            cands.join(F.broadcast(mapping), "signature").select(
+                "node_id", "cluster_name", "support"
+            )
+        )
     index = {
         frozenset(s.split("|")): (cluster_name[comp[s]], comp_support[comp[s]]) for s in sigs
     }

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from architxt_spark.model import NODE_SCHEMA
-from architxt_spark.session import stage_barrier
+from architxt_spark.session import held, stage_barrier
 
 
 def get_root_nodes(nodes: DataFrame, rels: DataFrame) -> DataFrame:
@@ -85,15 +85,15 @@ def _traverse(roots: DataFrame, rels: DataFrame, max_depth: int) -> tuple[DataFr
     reached = frontier
     edge_levels: list[DataFrame] = []
 
-    # The relationship frame is probed once per BFS level; without pinning
+    # The relationship frame is probed once per BFS level; without holding
     # it, every level re-runs its upstream plan (at 100 TB: a full edge-set
-    # scan per level).  MEMORY_AND_DISK persistence of the edge frame across
-    # an iterative traversal is the standard shape (GraphX does the same);
-    # the first level's join materializes it, later levels read blocks.
-    from pyspark import StorageLevel
-
-    rels = rels.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    # scan per level).  Caching the edge frame across an iterative
+    # traversal is the standard shape (GraphX does the same; the default
+    # storage level spills to disk); the first level's join materializes
+    # it, later levels read blocks.  Releasing it when the block closes is
+    # safe: every surviving frame is built from eagerly checkpointed
+    # per-level steps, not from ``rels``.
+    with held(rels):
         for depth in range(1, max_depth + 1):
             step = (
                 frontier.select("tree_id", "nid")
@@ -136,10 +136,6 @@ def _traverse(roots: DataFrame, rels: DataFrame, max_depth: int) -> tuple[DataFr
             # reached stays a lazy union of checkpointed frontiers — shallow
             # lineage, no extra materialization pass per level.
             reached = reached.unionByName(frontier)
-    finally:
-        # Safe to release immediately: every surviving frame below is built
-        # from eagerly checkpointed per-level steps, not from ``rels``.
-        rels.unpersist()
 
     if edge_levels:
         edges = edge_levels[0]

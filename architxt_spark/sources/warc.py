@@ -814,8 +814,10 @@ def _sync_to_record(rb: _RangeBuf, start: int, end: int) -> int:
     readers included): a payload that embeds a COMPLETE well-formed WARC
     record can be picked up as a phantom sync point when a split boundary
     lands inside it.  The container's ``Content-Length`` walk in the
-    previous split still emits the true record, so nothing is lost —
-    at worst one extra row for adversarial payloads."""
+    previous split still emits the true record, and the phantom's end is
+    no record boundary, so :func:`_range_records` resyncs after it
+    instead of ending the split — every true record is emitted once, plus
+    at worst one phantom row for adversarial payloads."""
     pos = start
     while pos < end:
         rb.advance(pos)
@@ -854,7 +856,14 @@ def _range_records(
             rb.advance(pos)
             parsed = _parse_record_at(rb, pos)
             if parsed is None:
-                return  # malformed tail: stop, mirroring parse_warc
+                if start == 0:
+                    return  # malformed tail: stop, mirroring parse_warc
+                # a synced split may have walked off a phantom record
+                # embedded in an outer payload: scan on for a true one
+                pos = _sync_to_record(rb, pos + 1, end)
+                if pos < 0:
+                    return
+                continue
             headers, body, nxt = parsed
             wtype = headers.get("warc-type", "")
             if not record_types or wtype in record_types:

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from architxt_spark.functions import text as T
-from architxt_spark.session import stage_barrier
+from architxt_spark.session import held, stage_barrier
 
 
 def read_document_stream(spark: SparkSession, path: str, schema: str) -> DataFrame:
@@ -123,13 +123,11 @@ def minhash_dedup_batch(
     # micro-batch at sf0.1 against ~3 s for this shape; `_spread` inside
     # the pipeline re-partitions the (typically single-file,
     # single-partition) micro-batch so hashing parallelizes.
-    bands = (
-        _signature_frame(batch, text_col, id_col)
-        .select("id", F.explode(minhash_bands(F.col("sig"))).alias("band"))
-        .persist()
+    bands = _signature_frame(batch, text_col, id_col).select(
+        "id", F.explode(minhash_bands(F.col("sig"))).alias("band")
     )
-    bands.count()  # eager: fold the gated-batch lineage into the cache once
-    try:
+    with held(bands):
+        bands.count()  # eager: fold the gated-batch lineage into the cache once
         hit_hist = None
         if bloom_bits is not None:
             # bounded-state tier: the history is the bit_or-merged Bloom
@@ -207,7 +205,7 @@ def minhash_dedup_batch(
             .distinct()
         )
         # materialize the (small) survivor id set so the index write and the
-        # returned frame don't re-run the signature pipeline after unpersist
+        # returned frame don't re-run the signature pipeline once bands is released
         survivors = survivors.join(losers, "id", "left_anti").transform(stage_barrier)
 
         kept = batch.join(
@@ -228,8 +226,6 @@ def minhash_dedup_batch(
                 new_bands, "band", n_bits=bloom_bits, n_hashes=bloom_hashes
             ).write.mode("append").parquet(f"{index_path}_bloom")
         return kept
-    finally:
-        bands.unpersist()
 
 
 def stream_minhash_dedup(

@@ -27,34 +27,38 @@ def test_rotation_prefix_is_valid_and_first():
     allq = E._all_queries()
     names = list(q)
     assert set(names) == set(allq)
-    # r15 (optimization round 2): entries whose executed code changed
-    # this round lead (single-scan classifier/LM/DSIR scoring, cross-pair
-    # signature carry, BFS/PageRank scheduling cuts, memo-key +
-    # signature-lifecycle changes), then ALL 36 entries whose newest
-    # driver verdict is r13 — the <=2-round rotation contract
+    # entries whose executed code changed this round lead (one owner per
+    # cached frame on the dedup, curation, classifier, graph, clustering,
+    # media and streaming paths; the WARC split resync), in this order
     touched = (
-        "quality_classifier", "lm_perplexity", "ppl_buckets", "dsir",
-        "contamination_screen", "graph_extract", "link_pagerank",
-        "dedup_pairs", "dedup_filtered", "stream_minhash_dedup",
-        "stream_curate",
+        "dedup_pairs", "dedup_filtered", "dedup_exact_spans",
+        "dedup_components", "contamination_screen", "curation_pipeline",
+        "crawl_to_corpus", "quality_classifier", "graph_extract",
+        "cluster_documents", "cluster_instance_documents",
+        "multimodal_dedup", "crawl_media_dedup", "stream_minhash_dedup",
+        "stream_curate", "warc_split_roundtrip",
     )
     for i, k in enumerate(touched):
         assert names.index(k) == i, k
-    stale_r13 = (
-        "curation_pipeline", "crawl_to_corpus", "c4_clean", "text_profile",
-        "pii_redaction", "lang_distribution", "doc_quality_stats",
-        "bm25_batch", "bpe_suite", "chunk_pipeline", "corpus_delta",
-        "crawl_media_dedup", "dataset_extract_nation", "dedup_components",
-        "doc_chunking", "embedding_near_dup", "events_funnel",
-        "events_rollup_streaming", "events_sessionize_streaming",
-        "export_stats", "extract_vocab", "forest_stats_documents",
-        "gen_instance", "join_salted_revenue", "llm_rewrite_stub",
-        "nlp_parse_forest", "sampling_mixture", "sampling_strata",
-        "scalar_funcs", "schema_groups_nation", "simple_rewrite_documents",
-        "sketch_suite", "temporal_joins", "unicode_split",
-        "unpivot_orders", "window_grouping",
+    # then ALL 36 entries whose newest driver verdict is r14 (PERF_r15
+    # queries_dropped) — the <=2-round rotation contract
+    stale_r14 = (
+        "ann_recall", "ann_suite", "bm25_topk", "cluster_documents",
+        "cluster_instance_documents", "collocations", "corpus_health",
+        "coverage_metric", "dedup_exact_spans", "dedup_simhash",
+        "distinct_parts_per_brand", "doc_loader_files",
+        "doc_loader_json_props", "domain_profile", "events_sessionize",
+        "extract_valid_trees", "join_filtered_customers", "llm_label_schema",
+        "metrics_customer", "multimodal_dedup", "multimodal_profile",
+        "ngram_stats", "percentile_orders", "random_project",
+        "rewrite_documents", "sampling_pack", "sampling_temperature",
+        "sampling_weighted", "semantic_dedup",
+        "setop_nations_cust_minus_supp", "sort_limit_top_orders",
+        "stream_url_seen", "tfidf_terms", "tree_leaves_nation",
+        "typed_export_orders", "warc_split_roundtrip",
     )
-    for k in stale_r13:
+    assert len(set(touched) | set(stale_r14)) == 47
+    for k in stale_r14:
         assert names.index(k) < 47, k
     # folded-away entries must be GONE (their coverage lives in the folds)
     for gone in ("ann_topk", "ann_ivf_topk", "ann_pq_adc", "window_orders",

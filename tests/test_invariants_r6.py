@@ -118,7 +118,9 @@ def test_durable_barriers_identical_results(spark, tmp_path):
     """stage_barrier with durable mode on: reliable checkpoint files land
     under the checkpoint dir and every operator that barriers produces
     IDENTICAL results — the 100-TB posture where executor loss after
-    lineage truncation must not fail the job."""
+    lineage truncation must not fail the job.  The decontaminated run
+    covers the dedup keep-set, the signature frame and the benchmark
+    signatures, which all leave their functions as barriers."""
     import os
 
     from architxt_spark.functions.curation import curate_corpus
@@ -128,20 +130,23 @@ def test_durable_barriers_identical_results(spark, tmp_path):
     )
 
     df = _near_dup_corpus(spark, seed=31)
-    kept_local, census_local = curate_corpus(df)
-    baseline = (
-        sorted(r.doc_id for r in kept_local.collect()),
-        sorted((r.stage, r.n_docs) for r in census_local.collect()),
-    )
+    bench = df.filter(F.col("doc_id") % 5 == 0).select("doc_id", "text")
+    inputs = {"plain": {}, "decontaminated": {"decontaminate_against": bench}}
+
+    def run(kwargs):
+        kept, census = curate_corpus(df, **kwargs)
+        return (
+            sorted(r.doc_id for r in kept.collect()),
+            sorted((r.stage, r.n_docs) for r in census.collect()),
+        )
+
+    baseline = {name: run(kwargs) for name, kwargs in inputs.items()}
+    stages = dict(baseline["decontaminated"][1])
+    assert stages["decontam"] < stages["dedup"]  # the bench really drops docs
 
     enable_durable_barriers(spark, str(tmp_path / "ckpt"))
     try:
-        kept_d, census_d = curate_corpus(df)
-        got = (
-            sorted(r.doc_id for r in kept_d.collect()),
-            sorted((r.stage, r.n_docs) for r in census_d.collect()),
-        )
-        assert got == baseline
+        assert {name: run(kwargs) for name, kwargs in inputs.items()} == baseline
         ckpt_files = [
             os.path.join(root, f)
             for root, _, fs in os.walk(tmp_path / "ckpt")

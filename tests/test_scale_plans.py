@@ -153,17 +153,22 @@ def test_ann_topk_finalization_is_two_phase(spark):
 
 
 def test_dedup_filter_restricts_minhash_to_exact_reps(spark):
-    """Round-6 hot-band fix, pinned at the plan level: dedup_filter's
-    minhash pipeline must read the representative semi-join (LeftSemi on
-    the id), and the band self-join must sit above the band-DF anti-join
-    (the max_band_df cap)."""
+    """Round-6 hot-band fix: dedup_filter's minhash pipeline must read
+    the exact-duplicate representatives only, and the band self-join must
+    sit above the band-DF anti-join (the max_band_df cap).  The signature
+    frame lands behind a stage barrier, which hides the representative
+    semi-join from the returned plan, so the restriction is pinned on the
+    landed frame itself: one signature per exact-duplicate group, keyed
+    by its min id."""
     from architxt_spark.functions.dedup import dedup_filter
 
     rows = [(i, f"some document body with words number {i % 5} repeated") for i in range(40)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = dedup_filter(df, "text", "doc_id")
+    sig_out: list = []
+    out = dedup_filter(df, "text", "doc_id", signatures_out=sig_out)
+    reps = sorted(r.id for r in sig_out[0].select("id").collect())
+    assert reps == [0, 1, 2, 3, 4], "exact-representative restriction missing"
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in plan, "exact-representative semi-join missing"
     assert "CartesianProduct" not in plan
     # the band cap's anti-join (heavy bands excluded before pairing)
     assert "LeftAnti" in plan

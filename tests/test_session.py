@@ -71,6 +71,25 @@ def test_only_session_module_builds_sessions():
     assert offenders == []
 
 
+def test_only_session_module_caches_frames():
+    """Every cached frame has one owner in ``session.py``: frames that
+    leave their function land through ``stage_barrier``, scratch frames
+    are scoped by ``held``.  No other ``.py`` file under
+    ``architxt_spark/``, nor ``__spark_entry__.py``, calls ``persist``,
+    ``cache`` or ``unpersist``."""
+    needles = (".persist(", ".cache()", ".unpersist(")
+    session_py = ROOT / "architxt_spark" / "session.py"
+    paths = [*sorted((ROOT / "architxt_spark").rglob("*.py")), ROOT / "__spark_entry__.py"]
+    offenders = [
+        f"{path.relative_to(ROOT)}:{n}"
+        for path in paths
+        if path != session_py
+        for n, line in enumerate(path.read_text(encoding="utf-8").splitlines(), 1)
+        if any(needle in line for needle in needles)
+    ]
+    assert offenders == []
+
+
 def test_stage_barrier_local_default(spark):
     df = spark.range(10)
     out = stage_barrier(df.withColumnRenamed("id", "n"))

@@ -159,6 +159,38 @@ def test_read_warc_split_overrun_and_false_magic(spark, tmp_path):
     assert got == whole and len(got) == 3
 
 
+def test_split_after_embedded_record_keeps_later_records():
+    """A payload that embeds a COMPLETE record: a split boundary inside the
+    outer record syncs the next split onto the embedded "phantom" record,
+    whose end is no record boundary.  That split resyncs instead of
+    stopping, so every true record after it is still emitted — for every
+    boundary position, exactly once, plus at most the phantom."""
+    inner = build_warc([{"warc_type": "response", "target_uri": "phantom",
+                         "payload": b"inner body"}])
+    raw = build_warc([
+        {"warc_type": "response", "target_uri": "r0", "payload": b"zero " * 20},
+        {"warc_type": "response", "target_uri": "R",
+         "payload": b"outer head " + inner + b" outer tail",
+         "content_type": "application/octet-stream"},
+        {"warc_type": "response", "target_uri": "r2", "payload": b"two"},
+        {"warc_type": "response", "target_uri": "r3", "payload": b"three"},
+    ])
+
+    def splits(*cuts):
+        bounds = [0, *cuts, len(raw)]
+        return [
+            [r["target_uri"] for r in _range_records(
+                "f", a, b, (), False, lambda p: io.BytesIO(raw))]
+            for a, b in zip(bounds, bounds[1:])
+        ]
+
+    assert splits(raw.index(inner) - 1) == [["r0", "R"], ["phantom", "r2", "r3"]]
+    for cut in range(1, len(raw)):
+        got = [uri for split in splits(cut) for uri in split]
+        assert sorted(u for u in got if u != "phantom") == ["R", "r0", "r2", "r3"], cut
+        assert got.count("phantom") <= 1, cut
+
+
 def test_read_warc_split_gz_fallback(spark, tmp_path):
     """.warc.gz members get one full-file split; mixed directories work."""
     raw = build_warc(_records())
