@@ -3759,7 +3759,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # entry folded/renamed or code-touched this round, go FIRST so any
     # prefix the gate takes maximizes newly-verified coverage.
     first = [
-        # Entries whose executed code changed this round: every cached
+        # Entries whose executed code changed this round: the rewrite loop
+        # runs one path with or without its callback and its per-tree
+        # passes emit plain node rows, llm_rewrite groups trees through
+        # session.tree_buckets, and clean_unicode lost its normalizer hook.
+        "rewrite_documents",
+        "llm_rewrite_stub",
+        "unicode_split",
+        # Entries whose executed code changed last round: every cached
         # frame got one owner (stage_barrier or session.held) across the
         # dedup, curation, classifier, graph, clustering, media and
         # streaming paths, and read_warc_split resyncs after a phantom
@@ -3803,7 +3810,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_stats",
         "percentile_orders",
         "random_project",
-        "rewrite_documents",
         "sampling_pack",
         "sampling_temperature",
         "sampling_weighted",

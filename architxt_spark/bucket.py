@@ -273,36 +273,3 @@ class DeltaTreeBucket(ParquetTreeBucket):
             return
         dt = self._tables.DeltaTable.forPath(self.spark, self.root)
         dt.delete(F.col("tree_id").isin(tree_ids))
-
-
-def write_bucketed_nodes(
-    nodes: DataFrame,
-    table: str,
-    *,
-    n_buckets: int = 64,
-    mode: str = "overwrite",
-) -> None:
-    """Persist the node table BUCKETED by ``tree_id`` (hive-style bucketed
-    parquet via ``saveAsTable``): every per-tree operation downstream —
-    the rewrite loop's tree-keyed groupBys, forest joins, dataset
-    extraction pivots — reads co-located buckets and skips its shuffle
-    entirely (SortMergeJoin/HashAggregate with NO Exchange, plan-tested).
-
-    This is the storage layout a 100-TB forest should live in between
-    pipeline stages: the one-off bucketed write amortizes across every
-    subsequent tree-keyed stage.  Size ``n_buckets`` ≈ cluster cores ×
-    a small factor (buckets are the parallelism floor for bucket-local
-    stages)."""
-    (
-        nodes.write.mode(mode)
-        .format("parquet")
-        .bucketBy(n_buckets, "tree_id")
-        .sortBy("tree_id")
-        .saveAsTable(table)
-    )
-
-
-def read_bucketed_nodes(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed node table; bucket metadata rides the catalog, so
-    tree_id-keyed plans skip their exchange automatically."""
-    return spark.table(table)

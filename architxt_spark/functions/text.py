@@ -8,8 +8,6 @@ are built-in-function expressions (whole-stage codegen; no Python UDFs).
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -50,9 +48,11 @@ _EXPR_CACHE_MAX = 1024
 #: Column trees wrapping dead java objects)
 _EXPR_CACHE_APP: list = [None]
 
-#: resolved AttributeReferences print as ``name#<exprId>`` in the java
-#: node string; unresolved trees (F.col/F.lit compositions) never do
-_RESOLVED_RE = re.compile(r"#\d")
+#: a resolved column (``df["text"]``, alone or nested) enters the java
+#: node tree as an ``ExpressionColumnNode(text#0,…)``; unresolved trees
+#: print ``UnresolvedAttribute``/``Literal``/``SqlExpression`` nodes, whose
+#: literal text may itself contain ``#<digit>``
+_RESOLVED_NODE = "ExpressionColumnNode("
 
 
 #: sentinel: "this Column contains resolved attributes — do not cache"
@@ -68,11 +68,10 @@ def _column_key(c: Column):
     (MISSING_ATTRIBUTES on select, or a silent wrong-side bind in a
     join).  The java node string DOES carry exprIds (``text#0``) but also
     call-site origins, which would defeat the cache for unresolved trees
-    — so it is used only as a detector: any ``name#id`` occurrence means
+    — so it is used only as a detector: any :data:`_RESOLVED_NODE` means
     resolved attributes are present and the call bypasses the cache
     entirely."""
-    node = c._jc.node().toString()
-    if _RESOLVED_RE.search(node):
+    if _RESOLVED_NODE in c._jc.node().toString():
         return _UNCACHEABLE
     return str(c)
 
@@ -294,18 +293,11 @@ def standardize_punct(col: Column) -> Column:
 JVM_NFC_FUNC = "architxt_nfc"
 
 
-def nfc_normalize(
-    df: DataFrame,
-    col: str,
-    out: str | None = None,
-    *,
-    normalizer=None,
-) -> DataFrame:
+def nfc_normalize(df: DataFrame, col: str, out: str | None = None) -> DataFrame:
     """Unicode NFC normalization of a string column (decomposed e +
     combining acute → composed é, compatibility sequences untouched).
 
-    Engine path, in order: an explicit ``normalizer`` callable
-    ``(df, col, out) -> DataFrame``; else the JVM UDF registered as
+    Engine path, in order: the JVM UDF registered as
     :data:`JVM_NFC_FUNC` (see :mod:`architxt_spark.jvm` — a one-line
     ``java.text.Normalizer`` wrapper compiled from shipped source and
     attached with ``ADD JAR``, the 100-TB path: no Arrow batch
@@ -316,8 +308,6 @@ def nfc_normalize(
     test_jvm_nfc.py); the column contract is engine-agnostic (DuckDB
     twin: ``nfc_normalize``).  NFC is idempotent and ASCII-invariant:
     ASCII-only corpora pass through byte-identical."""
-    if normalizer is not None:
-        return normalizer(df, col, out or col)
     try:
         has_jvm = df.sparkSession.catalog.functionExists(JVM_NFC_FUNC)
     except Exception:  # noqa: BLE001 — a catalog quirk must not kill the fallback
@@ -341,24 +331,17 @@ def nfc_normalize(
     return df.withColumn(out or col, _nfc(F.col(col)))
 
 
-def clean_unicode(
-    df: DataFrame,
-    col: str,
-    out: str | None = None,
-    *,
-    normalizer=None,
-) -> DataFrame:
+def clean_unicode(df: DataFrame, col: str, out: str | None = None) -> DataFrame:
     """The composed hygiene pass: NFC → control strip → punctuation
     standardization.  NFC runs first so decomposed typographic marks are
     composed before the translate map sees them; it runs JVM-side when
-    the :data:`JVM_NFC_FUNC` UDF is registered (or through an explicit
-    ``normalizer`` callable), else the Arrow fallback.  The input
-    spreads to the session's parallelism when under-partitioned (one
-    parquet file ⇒ one partition ⇒ the Arrow NFC batch serializes on a
-    single core)."""
+    the :data:`JVM_NFC_FUNC` UDF is registered, else the Arrow fallback.
+    The input spreads to the session's parallelism when under-partitioned
+    (one parquet file ⇒ one partition ⇒ the Arrow NFC batch serializes on
+    a single core)."""
     from architxt_spark.functions.dedup import _spread
 
-    df = nfc_normalize(_spread(df), col, out or col, normalizer=normalizer)
+    df = nfc_normalize(_spread(df), col, out or col)
     return df.withColumn(
         out or col, standardize_punct(strip_controls(F.col(out or col)))
     )

@@ -6,10 +6,10 @@ a :class:`Normalizer` protocol; :class:`FallbackNormalizer` (identity) and
 the test :class:`UppercaseGroupNormalizer` are deterministic stand-ins a
 real endpoint client drops into.  Everything around the boundary is real:
 
-- token-budgeted batching inside partitions (``constrained_batches``,
+- token-budgeted batching inside tree buckets (``constrained_batches``,
   ``architxt/utils.py:74-98`` flavor);
-- ``mapInPandas`` rewrite with PER-TREE fallback to the original on any
-  normalizer failure (``llm.py:387-396``);
+- per-bucket ``applyInPandas`` rewrite with per-batch fallback to the
+  original trees on any normalizer failure (``llm.py:387-396``);
 - ``sanitize_forest``: invalid GROUP (non-ENT child) / REL (≠2 GROUP
   children) demoted to ``UNDEF_<id>`` (``llm.py:332-406``) — a pure
   DataFrame transform;
@@ -23,12 +23,13 @@ from __future__ import annotations
 import difflib
 import re
 import unicodedata
-from typing import Iterator, Protocol
+from typing import Protocol
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from architxt_spark.model import NODE_SCHEMA, NodeType
+from architxt_spark.session import tree_buckets
 from architxt_spark.trees import PyTree, rows_to_trees, tree_to_rows
 
 
@@ -132,23 +133,17 @@ def llm_rewrite(
     *,
     max_batch_tokens: int = 4000,
 ) -> DataFrame:
-    """Distributed LLM rewrite: trees re-assembled per partition, batched by
-    token budget, normalized, re-emitted as node rows.  Any normalizer
-    failure falls back to the ORIGINAL tree (``llm.py:387-396``)."""
+    """Distributed LLM rewrite: trees grouped through
+    :func:`architxt_spark.session.tree_buckets` (many whole trees per
+    pandas call), batched by token budget, normalized, re-emitted as node
+    rows.  Any normalizer failure falls back to the ORIGINAL trees of
+    that batch (``llm.py:387-396``)."""
     import pandas as pd
 
     cols = [f.name for f in NODE_SCHEMA.fields]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # A tree's rows must not straddle Arrow batches: rows are hash-
-        # partitioned by tree_id (below), so concatenating the partition's
-        # batches regroups every tree completely.  Partition memory is
-        # bounded by spark.sql.shuffle.partitions sizing, as elsewhere.
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
         normalizer = normalizer_factory()
-        parts = list(batches)
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
         trees = rows_to_trees(pdf.to_dict("records"))
         items = [(tid, str(t)) for tid, t in trees.items()]
         out_rows: list[dict] = []
@@ -162,12 +157,9 @@ def llm_rewrite(
                 normalized = originals
             for tid, t in zip(batch_ids, normalized):
                 out_rows.extend(tree_to_rows(t, tid))
-        yield pd.DataFrame(out_rows, columns=cols)
+        return pd.DataFrame(out_rows, columns=cols)
 
-    # explicit width: a count-less repartition is AQE-coalescible, and a
-    # few MB of node rows would fold into fewer tasks than cores
-    width = nodes.sparkSession.sparkContext.defaultParallelism
-    return nodes.repartition(width, "tree_id").mapInPandas(run, NODE_SCHEMA)
+    return tree_buckets(nodes).applyInPandas(run, NODE_SCHEMA)
 
 
 def sanitize_forest(nodes: DataFrame) -> DataFrame:

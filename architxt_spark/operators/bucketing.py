@@ -13,7 +13,7 @@ operator (rewrites, pivots, forest stats windows) becomes exchange-free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -28,7 +28,8 @@ def write_bucketed(
     """Persist ``df`` bucketed (and optionally sorted) by the join key.
 
     Uses the session catalog (``saveAsTable`` — bucket metadata cannot
-    ride on a bare parquet path).  ``n_buckets`` should be sized so one
+    ride on a bare parquet path); read it back with ``spark.table(table)``,
+    not ``read.parquet`` of the files, or the bucketing is lost.  ``n_buckets`` should be sized so one
     bucket of the LARGEST co-located table fits an executor's memory at
     the target scale; every table that joins on ``bucket_cols`` must use
     the same count for the exchange-free plan.
@@ -37,12 +38,6 @@ def write_bucketed(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Catalog read preserving bucket metadata (a plain ``read.parquet``
-    of the same files would NOT — the scan must come from the table)."""
-    return spark.table(table)
 
 
 def is_exchange_free_join(joined: DataFrame) -> bool:

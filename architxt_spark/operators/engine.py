@@ -20,8 +20,13 @@ Scale design:
   or extra checkpoint;
 - each iteration ends with ``localCheckpoint`` to truncate lineage
   (a Pregel-style loop);
-- "did anything change" is a cheap aggregation on a per-tree ``changed``
-  flag column, not a driver-side diff;
+- "did anything change" comes from one speculative probe pass that
+  returns per-op changed-tree counts (``probe_ops``), not a driver-side
+  diff; the winning chain is deferred into the next pass, so the
+  per-tree passes emit plain node rows;
+- the ``on_iteration`` callback costs one census aggregation per
+  iteration and leaves the plan as it is (the census re-runs the
+  deferred chain lazily instead of landing it);
 - cluster support is computed once per iteration (iteration-synchronous
   semantics; the reference re-evaluates against the mutating forest as it
   rewrites tree-by-tree — an accepted, documented difference matching its
@@ -34,46 +39,39 @@ from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType, StringType
 
 from architxt_spark.model import NODE_SCHEMA, NodeType
 from architxt_spark.operators import pytree_ops
 from architxt_spark.trees import PyTree, rows_to_trees, tree_to_rows
-from architxt_spark.session import stage_barrier
-
-#: node schema + per-tree change flag (carried on every row of the tree).
-_OP_SCHEMA = StructType(list(NODE_SCHEMA.fields) + [StructField("changed", StringType(), True)])
+from architxt_spark.session import stage_barrier, tree_buckets
 
 
-def apply_tree_op(nodes: DataFrame, op: Callable[[PyTree], bool], op_name: str = "op") -> DataFrame:
-    """Apply a per-tree rewrite to every tree; returns nodes + ``changed``
-    column ('1' on every row of a modified tree).  Trees are processed in
-    hash buckets (many trees per pandas call — see
+def apply_tree_op(nodes: DataFrame, op: Callable[[PyTree], object]) -> DataFrame:
+    """Apply an in-place per-tree rewrite to every tree and re-emit the
+    node rows (``NODE_SCHEMA``; ``op``'s return value is ignored — change
+    detection is :func:`probe_ops`' job).  Trees are processed in hash
+    buckets (many trees per pandas call — see
     :func:`architxt_spark.session.tree_buckets`): the per-group Arrow
     overhead of one-call-per-tree dominated the whole rewrite iteration
     (12.6 s → ~1 s for the reduce pass over 2,500 trees)."""
     import pandas as pd
 
-    from architxt_spark.session import tree_buckets
+    cols = [f.name for f in NODE_SCHEMA.fields]
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        recs = pdf.to_dict("records")
-        trees = rows_to_trees(recs)
         out = []
-        for tid, tree in trees.items():
-            changed = op(tree)
-            for row in tree_to_rows(tree, tid):
-                row["changed"] = "1" if changed else None
-                out.append(row)
-        return pd.DataFrame(out, columns=[f.name for f in _OP_SCHEMA.fields])
+        for tid, tree in rows_to_trees(pdf.to_dict("records")).items():
+            op(tree)
+            out.extend(tree_to_rows(tree, tid))
+        return pd.DataFrame(out, columns=cols)
 
-    return tree_buckets(nodes).applyInPandas(run, _OP_SCHEMA)
+    return tree_buckets(nodes).applyInPandas(run, NODE_SCHEMA)
 
 
 def probe_ops(
     nodes: DataFrame,
     ops: list[tuple[str, Callable[[PyTree], bool]]],
-    pre: Callable[[PyTree], bool] | None = None,
+    pre: Callable[[PyTree], bool],
 ) -> list[int]:
     """Speculatively probe EVERY op in ONE ``applyInPandas`` pass: each op
     runs against a fresh copy of each tree and only the changed FLAGS come
@@ -101,8 +99,7 @@ def probe_ops(
         trees = rows_to_trees(pdf.to_dict("records"))
         out = []
         for tid, tree in trees.items():
-            if pre is not None:
-                pre(tree)
+            pre(tree)
             # stop at the tree's first changing op: the caller only needs
             # the globally-first changed op (min over trees of each
             # tree's first change — unaffected by skipping later ops) and
@@ -115,8 +112,6 @@ def probe_ops(
                 if changed:
                     break
         return pd.DataFrame(out, columns=["op", "changed"])
-
-    from architxt_spark.session import tree_buckets
 
     flags = tree_buckets(nodes).applyInPandas(run, "op int, changed int")
     counts = {
@@ -417,12 +412,14 @@ def rewrite(
     iteration simplifies nothing or after ``epoch`` iterations.
 
     ``on_iteration`` receives a metrics dict per iteration (iteration
-    index, winning operation, rows changed, per-type node census) — the
+    index, winning operation, trees changed, per-type node census) — the
     reference's per-iteration MLflow logging (``metrics.py:414-473``,
     ``tree_rewriting/__init__.py:109-122``); hand it
     ``mlflow.log_metrics``-shaped sinks, a ``list.append``, or a JSONL
-    writer.  The census is ONE extra aggregation job per iteration, only
-    paid when a callback is installed.
+    writer.  The census is ONE extra aggregation per iteration, only paid
+    when a callback is installed; it re-runs the iteration's chain lazily
+    over the landed reduce output, so the loop the callback observes is
+    the loop that runs without it.
 
     ``on_stage`` receives ``(iteration, stage_name, seconds)`` wall-clock
     timings per iteration stage (reduce / cluster / probe) — every stage
@@ -474,30 +471,26 @@ def rewrite(
         ).collect()[0]
         return row.asDict()
 
-    # Deferred chain fns: when no per-iteration census is needed
-    # (``on_iteration is None``), iteration k's winning-op chain is not run
-    # as its own Arrow pass — it is fused into iteration k+1's reduce pass
-    # (both are per-tree PyTree transforms, and reduce(chain(x)) over one
-    # serialize/deserialize round-trip ≡ the two separate passes).  This
-    # drops one full applyInPandas pass + one checkpoint per iteration.
+    # Deferred chain fns: iteration k's winning-op chain is not run as its
+    # own Arrow pass — it is fused into iteration k+1's reduce pass (both
+    # are per-tree PyTree transforms, and reduce(chain(x)) over one
+    # serialize/deserialize round-trip ≡ the two separate passes), or into
+    # the post pass after the last iteration.
     pending: list[Callable[[PyTree], bool]] = []
 
     for iteration in range(epoch):
-        def run_reduce(t: PyTree, _fns=tuple(pending)) -> bool:
+        def run_reduce(t: PyTree, _fns=tuple(pending)) -> None:
             for fn in _fns:
                 fn(t)
-            return pytree_ops.reduce_all(t, {NodeType.ENT})
+            pytree_ops.reduce_all(t, {NodeType.ENT})
 
-        flagged = apply_tree_op(nodes, run_reduce, "reduce")
-        pending = []
-        # Materialize once: the reduce output feeds clustering, find_groups,
-        # the probe pass and the chain pass — without the checkpoint the
-        # Arrow reduce pass re-executes for each of them (measured 3x per
-        # iteration).  Same for the find_groups join pipeline below, which
-        # both the probe and the chain consume.
+        # Materialize once: the reduce output feeds clustering, the probe
+        # pass and the deferred chain — without the checkpoint the Arrow
+        # reduce pass re-executes for each of them (measured 3x per
+        # iteration).
         nodes = timed(
             iteration, "reduce",
-            lambda: flagged.drop("changed").transform(stage_barrier),
+            lambda: apply_tree_op(nodes, run_reduce).transform(stage_barrier),
         )
 
         sig_index = timed(
@@ -535,43 +528,27 @@ def rewrite(
         winner = next((i for i, n in enumerate(counts) if n), None)
 
         upto = ops if winner is None else ops[: winner + 1]
-        chain_fns = [
-            f
-            for i, (name, f) in enumerate(upto)
-            if i == winner or name in RENAME_SIDE_EFFECT_OPS
+        # fg leads so the chain sees the post-find_groups state the probe
+        # probed
+        pending = [
+            fg,
+            *(
+                f
+                for i, (name, f) in enumerate(upto)
+                if i == winner or name in RENAME_SIDE_EFFECT_OPS
+            ),
         ]
 
-        def run_chain(t: PyTree, _fns=(fg, *chain_fns)) -> bool:
-            changed = False
-            for fn in _fns:
-                changed = fn(t) or changed
-            return changed
-
-        if on_iteration is None:
-            # fused into the next reduce pass (or the post pass below);
-            # fg leads so the chain sees the post-find_groups state the
-            # probe probed
-            pending = [fg, *chain_fns]
-        else:
-            # the census the callback receives must see the find_groups
-            # conversions and the chain's effects, so both run as one
-            # pass here
-            nodes = (
-                apply_tree_op(nodes, run_chain, "chain")
-                .drop("changed")
-                .transform(stage_barrier)
-            )
-
-        iteration_changed = winner is not None
-        winning_op = ops[winner][0] if winner is not None else None
-        n_changed = counts[winner] if winner is not None else 0
-
         if on_iteration is not None:
+            def run_chain(t: PyTree, _fns=tuple(pending)) -> None:
+                for fn in _fns:
+                    fn(t)
+
             on_iteration(
                 dict(
                     iteration=iteration,
-                    operation=winning_op,
-                    trees_changed=n_changed,
+                    operation=ops[winner][0] if winner is not None else None,
+                    trees_changed=counts[winner] if winner is not None else 0,
                     # the reference's run params (tree_rewriting:110-122),
                     # logged once by mlflow-shaped sinks
                     params=dict(
@@ -582,22 +559,24 @@ def rewrite(
                         edit_ops=", ".join(name for name, _ in ops),
                     ),
                 )
-                | census(nodes)
+                # the census must see find_groups' conversions and the
+                # chain's effects: one lazy aggregation over the chain
+                # pass, which stays deferred for the loop itself
+                | census(apply_tree_op(nodes, run_chain))
             )
 
-        if not iteration_changed:
+        if winner is None:
             break
 
     # post-process naming passes (``_post_process``, ``:227-259``) — both
     # are per-tree independent, so they fuse into ONE applyInPandas pass,
     # together with any chain fns the last iteration deferred
-    def post(t: PyTree, _fns=tuple(pending)) -> bool:
+    def post(t: PyTree, _fns=tuple(pending)) -> None:
         for fn in _fns:
             fn(t)
-        a = pytree_ops.find_relations(t, naming_only=True)
-        b = pytree_ops.find_collections(t, naming_only=True)
-        return a or b
+        pytree_ops.find_relations(t, naming_only=True)
+        pytree_ops.find_collections(t, naming_only=True)
 
-    nodes = apply_tree_op(nodes, post, "post").drop("changed").transform(stage_barrier)
+    nodes = apply_tree_op(nodes, post).transform(stage_barrier)
 
     return simplify_names(nodes)

@@ -84,10 +84,9 @@ def sf_dir(default: str = "/root/testdata/sf0.1") -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", default)
 
 
-def tree_buckets(nodes, parallelism_factor: int = 4):
+def tree_buckets(nodes):
     """Grouping for per-tree pandas passes: hash-bucket ``tree_id`` at
-    ``parallelism_factor ×`` session parallelism instead of one pandas
-    call per tree.
+    4 × session parallelism instead of one pandas call per tree.
 
     ``groupBy("tree_id").applyInPandas`` invokes the Python fn once per
     GROUP — with document-sized trees the per-group Arrow/pandas
@@ -99,7 +98,7 @@ def tree_buckets(nodes, parallelism_factor: int = 4):
     pandas fn simply receives many trees per call.
 
     Scale posture: per-bucket memory is forest/(k) ≈ the partition size
-    the engine shuffles anyway (k = factor × cores); trees themselves
+    the engine shuffles anyway (k = 4 × cores); trees themselves
     stay the atomic unit, so skew is bounded by the largest tree times
     the hash balance, not by any key's popularity.  The width is pinned
     with an explicit repartition on the SAME bucket expression (which
@@ -111,7 +110,7 @@ def tree_buckets(nodes, parallelism_factor: int = 4):
     from pyspark.sql import functions as F
 
     p = nodes.sparkSession.sparkContext.defaultParallelism
-    k = parallelism_factor * p
+    k = 4 * p
     bucket = F.pmod(F.xxhash64("tree_id"), F.lit(k))
     return nodes.repartition(p, bucket).groupBy(bucket.alias("__tree_bucket"))
 

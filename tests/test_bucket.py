@@ -130,7 +130,7 @@ def test_bucketed_nodes_skip_tree_keyed_exchange(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from architxt_spark.bucket import read_bucketed_nodes, write_bucketed_nodes
+    from architxt_spark.operators.bucketing import write_bucketed
     from architxt_spark.trees import forest_from_trees, parse_tree
 
     trees = {
@@ -140,8 +140,8 @@ def test_bucketed_nodes_skip_tree_keyed_exchange(spark, tmp_path):
     nodes = forest_from_trees(spark, trees)
     table = f"bucketed_nodes_{uuid.uuid4().hex[:8]}"
     try:
-        write_bucketed_nodes(nodes, table, n_buckets=4)
-        bucketed = read_bucketed_nodes(spark, table)
+        write_bucketed(nodes, table, ["tree_id"], n_buckets=4, sort_cols=["tree_id"])
+        bucketed = spark.table(table)
         agg = bucketed.groupBy("tree_id").agg(F.count("*").alias("n"))
         plan = agg._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
@@ -156,7 +156,7 @@ def test_bucketed_nodes_skip_tree_keyed_exchange(spark, tmp_path):
         # exchange (a tiny side may still broadcast — that's fine; the
         # claim is no hashpartitioning shuffle of either bucketed side)
         j = bucketed.alias("x").join(
-            read_bucketed_nodes(spark, table).alias("y"), "tree_id"
+            spark.table(table).alias("y"), "tree_id"
         )
         jplan = j._jdf.queryExecution().executedPlan().toString()
         assert "Exchange hashpartitioning" not in jplan, jplan

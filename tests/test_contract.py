@@ -27,10 +27,13 @@ def test_rotation_prefix_is_valid_and_first():
     allq = E._all_queries()
     names = list(q)
     assert set(names) == set(allq)
-    # entries whose executed code changed this round lead (one owner per
-    # cached frame on the dedup, curation, classifier, graph, clustering,
-    # media and streaming paths; the WARC split resync), in this order
+    # entries whose executed code changed this round lead (one rewrite
+    # loop path, llm_rewrite through tree_buckets, clean_unicode without
+    # its normalizer hook), then last round's (one owner per cached frame
+    # on the dedup, curation, classifier, graph, clustering, media and
+    # streaming paths; the WARC split resync), in this order
     touched = (
+        "rewrite_documents", "llm_rewrite_stub", "unicode_split",
         "dedup_pairs", "dedup_filtered", "dedup_exact_spans",
         "dedup_components", "contamination_screen", "curation_pipeline",
         "crawl_to_corpus", "quality_classifier", "graph_extract",
@@ -57,9 +60,9 @@ def test_rotation_prefix_is_valid_and_first():
         "stream_url_seen", "tfidf_terms", "tree_leaves_nation",
         "typed_export_orders", "warc_split_roundtrip",
     )
-    assert len(set(touched) | set(stale_r14)) == 47
+    assert len(set(touched) | set(stale_r14)) == 49
     for k in stale_r14:
-        assert names.index(k) < 47, k
+        assert names.index(k) < 49, k
     # folded-away entries must be GONE (their coverage lives in the folds)
     for gone in ("ann_topk", "ann_ivf_topk", "ann_pq_adc", "window_orders",
                  "grouping_orders", "corpus_report", "corpus_drift",

@@ -64,6 +64,17 @@ def test_memo_bypasses_resolved_columns(spark):
     assert u1 is u2
 
 
+def test_memo_caches_literals_that_look_like_expr_ids(spark):
+    # an unresolved tree whose LITERAL contains ``#<digit>`` is still
+    # unresolved and must be cached; only a resolved column node bypasses
+    assert T.gopher_keep(F.lit("a#1")) is T.gopher_keep(F.lit("a#1"))
+    flag = F.when(F.col("text") == "x#3", F.lit("y")).otherwise(F.col("text"))
+    assert T.gopher_keep(flag) is T.gopher_keep(flag)
+    df = spark.createDataFrame([("a",)], ["text"])
+    for resolved in (df["text"], F.upper(df["text"]), df["text"].alias("z")):
+        assert T._column_key(resolved) is T._UNCACHEABLE
+
+
 def test_memo_cache_keyed_on_application_and_bounded(spark):
     # the cache clears when the applicationId changes (dead-JVM columns
     # must never be served) and never grows past its bound

@@ -7,7 +7,6 @@ import shutil
 import unicodedata
 
 import pytest
-from pyspark.sql import functions as F
 
 from architxt_spark.functions.text import (
     JVM_NFC_FUNC,
@@ -72,21 +71,6 @@ def test_seam_taken_when_function_registered(spark):
         assert got == _expected()
     finally:
         _drop(spark)
-
-
-def test_explicit_normalizer_callable_wins(spark):
-    """An explicit normalizer callable overrides both built-in paths
-    (the strategy seam for a site-specific jar or expression)."""
-    calls = []
-
-    def upper_normalizer(df, col, out):
-        calls.append((col, out))
-        return df.withColumn(out, F.upper(F.col(col)))
-
-    df = nfc_normalize(_mk(spark), "t", "n", normalizer=upper_normalizer)
-    assert calls == [("t", "n")]
-    got = {r["i"]: r["n"] for r in df.collect()}
-    assert got[5] == "PLAIN ASCII ONLY"
 
 
 @pytest.mark.skipif(shutil.which("javac") is None, reason="no JDK javac")

@@ -361,11 +361,7 @@ def test_assign_to_clusters_metrics_match_python(spark):
 def test_bucketed_join_is_exchange_free(spark, tmp_path):
     """Both sides bucketed by the join key with equal counts -> the join
     plan has no shuffle Exchange (the 100-TB co-location strategy)."""
-    from architxt_spark.operators.bucketing import (
-        is_exchange_free_join,
-        read_bucketed,
-        write_bucketed,
-    )
+    from architxt_spark.operators.bucketing import is_exchange_free_join, write_bucketed
 
     spark.sql(f"CREATE DATABASE IF NOT EXISTS bkt LOCATION '{tmp_path}/bkt'")
     try:
@@ -375,9 +371,7 @@ def test_bucketed_join_is_exchange_free(spark, tmp_path):
         write_bucketed(b, "bkt.b", ["k"], n_buckets=8, sort_cols=["k"])
         # merge hint on both: comparing SMJ-with-buckets vs SMJ-without,
         # not SMJ vs broadcast (broadcast has no exchange trivially)
-        joined = read_bucketed(spark, "bkt.a").hint("merge").join(
-            read_bucketed(spark, "bkt.b"), "k"
-        )
+        joined = spark.table("bkt.a").hint("merge").join(spark.table("bkt.b"), "k")
         assert joined.count() == 500
         assert is_exchange_free_join(joined)
         # control: the same SMJ on non-bucketed frames DOES shuffle
@@ -406,6 +400,31 @@ def test_rewrite_iteration_metrics(spark):
     assert log, "callback never fired"
     assert {"iteration", "operation", "trees_changed", "n_nodes", "n_group"} <= set(log[0])
     assert log[0]["iteration"] == 0
+
+
+def test_rewrite_callback_observes_the_uncalled_loop(spark):
+    """Installing ``on_iteration`` leaves the result unchanged, and its
+    census sees each iteration's find_groups conversions and chain effects
+    (the loop itself defers that chain into the next pass)."""
+    from test_resource_pins import _forest
+
+    from architxt_spark.operators.engine import rewrite
+
+    forest = _forest(spark)
+    log: list[dict] = []
+    with_cb = rewrite(forest, on_iteration=log.append).collect()
+    without = rewrite(forest).collect()
+    assert sorted(map(repr, with_cb)) == sorted(map(repr, without))
+    assert len(with_cb) == 390
+
+    census = ("operation", "trees_changed", "n_nodes", "n_ent", "n_group",
+              "n_coll", "n_rel", "n_distinct_group", "n_distinct_coll",
+              "n_unlabeled")
+    assert [tuple(e[k] for k in census) for e in log] == [
+        ("merge_groups", 20, 390, 148, 54, 0, 0, 1, 0, 0),
+        ("find_collections", 14, 390, 148, 54, 14, 0, 1, 1, 0),
+        (None, 0, 390, 148, 54, 14, 0, 1, 1, 0),
+    ]
 
 
 def test_cluster_driver_collect_is_aggregate_bounded(spark):

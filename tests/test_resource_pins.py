@@ -176,3 +176,15 @@ def test_rewrite_job_count(spark, count_jobs):
 
     forest = _forest(spark)
     assert count_jobs(lambda: rewrite(forest)) == 31
+
+
+def test_rewrite_callback_job_count(spark, count_jobs):
+    """``on_iteration`` adds one census aggregation per iteration (4
+    jobs each here) and nothing else: the chain stays deferred, so no
+    extra pass lands (3 iterations; 31 jobs without the callback)."""
+    from architxt_spark.operators.engine import rewrite
+
+    forest = _forest(spark)
+    log: list[dict] = []
+    assert count_jobs(lambda: rewrite(forest, on_iteration=log.append)) == 43
+    assert len(log) == 3

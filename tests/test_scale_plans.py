@@ -238,9 +238,9 @@ def test_explode_over_shingle_chain_has_no_inferred_filter(spark):
 
 
 def test_llm_rewrite_runs_at_session_width(spark):
-    """llm_rewrite's tree shuffle has a pinned width: a count-less
-    ``repartition`` is coalesced by AQE, and a small forest then reaches
-    the per-partition LLM pass in fewer tasks than cores."""
+    """llm_rewrite groups trees through ``session.tree_buckets``, whose
+    pinned-width exchange AQE cannot coalesce: a small forest still
+    reaches the per-bucket LLM pass at the session's width."""
     from architxt_spark.llm import llm_rewrite
 
     nodes = _forest(spark, n_trees=200)
@@ -248,5 +248,5 @@ def test_llm_rewrite_runs_at_session_width(spark):
     assert len(out.collect()) == nodes.count()  # executes out's own plan
     plan = out._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]  # AQE prints both sections
-    assert "MapInPandas" in final, plan
+    assert "FlatMapGroupsInPandas" in final, plan
     assert "coalesced" not in final, plan

@@ -1,9 +1,11 @@
 """Stage profile of the rewrite fixpoint iteration.
 
-Breaks sec/iteration into the four iteration stages (reduce Arrow pass,
-cluster signature collect, find_groups join pipeline, op-chain probe) at
-growing forest sizes — names which term grows fastest (the r9 verdict's
-question about the 160k-tree rung's 0.60 exponent).
+Breaks sec/iteration into the three iteration stages ``rewrite``'s
+``on_stage`` hook times (reduce Arrow pass — which also runs the previous
+iteration's deferred op chain —, cluster signature collect, op-chain
+probe with find_groups fused in) at growing forest sizes — names which
+term grows fastest (the r9 verdict's question about the 160k-tree rung's
+0.60 exponent).
 
 Usage: python tools/rewriteprof.py [--sizes 2500 40000 160000] [--repeats 2]
 Prints one stage table row per (size, stage) plus the per-iteration total.

@@ -9,7 +9,10 @@ Usage::
 Per size, builds an UNLABELLED forest (documents row-trees with group
 labels stripped — the structure-discovery input shape), runs the fixpoint
 ``rewrite()`` with the reference's knobs, and prints one JSON line:
-``{"size": N, "seconds": S, "iterations": I, "n_nodes": M}``.
+``{"size": N, "seconds": S, "iterations": I, "n_nodes": M}``.  The
+iteration count comes from the ``on_iteration`` callback, which adds one
+census aggregation per iteration and leaves the plan unchanged, so the
+timed loop is the one ``pipeline.simplify`` and the CLI run.
 
 These numbers are the engine-level anchor BASELINE.md's "simplify micro"
 row calls for; the reference publishes no figures to compare against, so
